@@ -1,5 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 
 /** Benchmark main: every SparkEntry query against SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout.
@@ -21,8 +24,57 @@ import org.apache.spark.sql.SparkSession
   *     captures a bounded tail of the sbt output, and the full-precision
   *     line (~3.5 KB for 68 queries) was getting head-truncated in the
   *     round-5 artifact. Full per-run detail goes to BENCH_RUNS.json.
+  *
+  * Isolated mode (`runMain graft.Bench <query substring>...`) benches only
+  * the matching queries, writes BENCH_ISOLATED*.json instead, and prints
+  * a per-stage table for each query — duration, input, shuffle read and
+  * write, spill, tasks — taken from its median timed pass, so the
+  * expensive stage of a slow query is identifiable without the UI.
   */
 object Bench {
+
+  /** Local property naming a timed run (`<query>#<pass>`) in isolated mode. */
+  private val RunKey = "graft.bench.run"
+
+  /** Completed stages grouped by the [[RunKey]] of the job that ran them.
+    * The key travels with the job-start event, so a stage event the
+    * listener bus delivers after its run returned still lands with that
+    * run. Read `byRun` only after `spark.stop()`, which drains the bus.
+    */
+  private class StageLog extends SparkListener {
+    private val runOfStage = mutable.Map.empty[Int, String]
+    val byRun = mutable.Map.empty[String, Vector[StageInfo]].withDefaultValue(Vector.empty)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(RunKey)))
+        .foreach(run => e.stageIds.foreach(runOfStage(_) = run))
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      runOfStage.get(e.stageInfo.stageId).foreach(run => byRun(run) :+= e.stageInfo)
+  }
+
+  private def printStages(name: String, pass: Int, wall: Double, stages: Seq[StageInfo]): Unit = {
+    def secs(s: StageInfo): Double =
+      (for (a <- s.submissionTime; b <- s.completionTime) yield (b - a) / 1e3).getOrElse(0.0)
+    def mb(bytes: Long): Double = bytes / 1e6
+    println(f"%n=== $name  pass=$pass  wall=$wall%.3f s  stages=${stages.size} ===")
+    println(f"${"sec"}%8s ${"input"}%9s ${"shRead"}%9s ${"shWrite"}%9s ${"spill"}%8s ${"tasks"}%5s  name")
+    stages.sortBy(-secs(_)).take(18).foreach { s =>
+      val m = s.taskMetrics
+      println(f"${secs(s)}%8.3f ${mb(m.inputMetrics.bytesRead)}%8.1fM ${mb(m.shuffleReadMetrics.totalBytesRead)}%8.1fM ${mb(m.shuffleWriteMetrics.bytesWritten)}%8.1fM ${mb(m.memoryBytesSpilled)}%7.1fM ${s.numTasks}%5d  [${s.stageId}] ${s.name.takeWhile(_ != '\n').take(90)}")
+    }
+    println(f"[bench] $name stage-seconds total=${stages.map(secs).sum}%.3f (wall $wall%.3f)")
+  }
+
+  /** /proc/loadavg's 1/5/15-minute averages, or "" where it is absent. */
+  private[graft] def loadavg(): String =
+    try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ").take(3).mkString(" ")
+    catch { case scala.util.control.NonFatal(_) => "" }
+
+  // Locale.ROOT: default-locale formatting would emit "12,345" on a
+  // comma-decimal JVM and corrupt the JSON artifacts
+  private[graft] def fmt(v: Double, decimals: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${decimals}f", v)
 
   /** Pull the per-query timing map out of a previous BENCH_OUT.json line.
     * The values are bare numbers our own `f3` wrote, so a targeted scan of
@@ -94,26 +146,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // delete reliable checkpoints (Ranks/Clusters) once GC'd — see
-      // etl.Sessions: unbounded checkpoint-dir growth otherwise
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    // optional reliable-checkpoint dir for iterative CC (see etl.Sessions)
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.sparkContext.setCheckpointDir)
-    spark.sparkContext.setLogLevel("WARN")
-
-    def loadavg(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ").take(3).mkString(" ")
-      catch { case scala.util.control.NonFatal(_) => "" }
+    val spark = graft.etl.Sessions.start("GraftBench")
 
     // Full-query action: forces every operator/column to execute without
     // writing bytes anywhere. Each run starts cache-cold: queries that
@@ -131,13 +164,18 @@ object Bench {
     val all = SparkEntry.queries.keys.toSeq.sorted
     val names =
       if (args.isEmpty) all else all.filter(n => args.exists(n.contains))
+    // isolated mode records every timed run's stages (printed at the end)
+    val stageLog = if (args.isEmpty) None else Some(new StageLog)
+    stageLog.foreach(spark.sparkContext.addSparkListener)
     val loadBefore = loadavg()
     names.foreach { n => // warmup (untimed)
       try execute(n) catch { case scala.util.control.NonFatal(_) => () }
     }
     val passes = 5
-    val samples: Seq[Seq[(String, Double)]] = (1 to passes).map { _ =>
+    val samples: Seq[Seq[(String, Double)]] = (1 to passes).map { pass =>
       names.map { n =>
+        if (stageLog.nonEmpty)
+          spark.sparkContext.setLocalProperty(RunKey, s"$n#$pass")
         val t0 = System.nanoTime()
         try execute(n)
         catch { case scala.util.control.NonFatal(_) => () }
@@ -150,9 +188,7 @@ object Bench {
     val timings = runsByQuery.map { case (n, runs) =>
       n -> runs.sorted.apply(passes / 2)
     }
-    // Locale.ROOT: default-locale formatting would emit "12,345" on a
-    // comma-decimal JVM and corrupt the JSON artifacts
-    def f3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
+    def f3(v: Double): String = fmt(v, 3)
     val qs = timings.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
     val total = timings.map(_._2).sum
@@ -203,6 +239,13 @@ object Bench {
     println(line)
     Console.out.flush()
     spark.stop()
+    // stop() drains the listener bus, so every stage event has arrived
+    stageLog.foreach { log =>
+      runsByQuery.foreach { case (n, runs) =>
+        val pass = runs.indexOf(runs.sorted.apply(passes / 2)) + 1
+        printStages(n, pass, runs(pass - 1), log.byRun(s"$n#$pass"))
+      }
+    }
     println(line)
     Console.out.flush()
   }

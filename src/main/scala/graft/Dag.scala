@@ -344,8 +344,7 @@ object Dag {
         "[--interval <seconds>] [--vacuum-stores <dir,dir,...>]")
     val minAge = positional.lift(2).map(_.toLong).getOrElse(60L)
     val maxAge = positional.lift(3).map(_.toLong).getOrElse(Long.MaxValue)
-    val spark = Sessions.builder("GraftDag").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start("GraftDag")
     try flagArgs match {
       case Some(interval) =>
         // SIGTERM/SIGINT → finish the in-flight tick, deliver its

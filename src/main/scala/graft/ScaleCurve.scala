@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-curve harness for the dedup family: synthesizes deterministic
@@ -182,21 +182,7 @@ object ScaleCurve {
     val work = args.lift(1).getOrElse("/tmp/graft-scale")
     val factors =
       if (args.length > 2) args.drop(2).map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.sparkContext.setCheckpointDir)
-    spark.sparkContext.setLogLevel("WARN")
-
-    def loadavg(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ").take(3).mkString(" ")
-      catch { case scala.util.control.NonFatal(_) => "" }
+    val spark = graft.etl.Sessions.start("GraftScaleCurve")
 
     // one synthesized corpus per factor, reused across runs; BOTH tables
     // must exist to skip (a run killed between the two writes would
@@ -653,7 +639,7 @@ object ScaleCurve {
       (System.nanoTime() - t0) / 1e9
     }
 
-    val loadBefore = loadavg()
+    val loadBefore = Bench.loadavg()
     // untimed warmup of EVERY cell (Bench's discipline): a min-factor-only
     // warmup absorbs codegen/JIT but leaves the LARGE factors' first timed
     // pass paying cold page-cache parquet reads and first-time shuffle
@@ -666,7 +652,7 @@ object ScaleCurve {
     // (shared-host VM) corrupts at most 1 of 3; the median rejects it.
     val passes = 3
     val samples: Seq[Seq[Double]] = (1 to passes).map(_ => cells.map(runOnce))
-    val loadAfter = loadavg()
+    val loadAfter = Bench.loadavg()
 
     final case class Measure(factor: Int, op: String, sec: Double, rows: Long,
         runs: Seq[Double])
@@ -675,10 +661,7 @@ object ScaleCurve {
       Measure(c.factor, c.op, runs.sorted.apply(passes / 2), c.rowsOf(c.mk()), runs)
     }
 
-    // Locale.ROOT: f-interpolators use the default locale, which can
-    // emit comma decimals and corrupt the JSON artifact
-    def fmt(v: Double, d: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${d}f", v)
+    import Bench.fmt
     println("| factor | operator | seconds | output rows |")
     println("|---|---|---|---|")
     results.foreach { m =>

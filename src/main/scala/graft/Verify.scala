@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,25 +8,7 @@ object Verify {
     // to those queries (builder-side iteration); the driver passes two.
     val Array(sfDir, outDir) = args.take(2)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata events.ts has shipped as TIMESTAMP(NANOS) (older driver
-      // generations) and as micros TIMESTAMP_NTZ (current). nanosAsLong keeps
-      // a nanos regeneration readable (arrives as long); Queries.t normalizes
-      // every stored shape to session-zoned TimestampType under UTC.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // delete reliable checkpoints (Ranks/Clusters) once GC'd — see
-      // etl.Sessions: unbounded checkpoint-dir growth otherwise
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    // optional reliable-checkpoint dir for iterative CC (see etl.Sessions)
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.sparkContext.setCheckpointDir)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.etl.Sessions.start("GraftVerify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -34,6 +34,9 @@ object Sessions {
       .config("spark.sql.legacy.timeParserPolicy", "LEGACY")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      // testdata events.ts has shipped as TIMESTAMP(NANOS) and as micros
+      // TIMESTAMP_NTZ: nanosAsLong keeps a nanos file readable (arrives as
+      // long), and Queries.t normalizes every stored shape under UTC
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // SQL-text names for graft's native expressions (vec_dot); the
       // Scala Column API works without this (graft.functions)
@@ -46,6 +49,18 @@ object Sessions {
     checkpointDir.fold(b)(dir => b.config("spark.checkpoint.dir", dir))
   }
 
-  def local(appName: String = "LoanSparkETL"): SparkSession =
-    builder(appName).getOrCreate()
+  /** Local cores for every main: `SPARK_GRAFT_CPUS`, default 4. Sizes
+    * both `local[N]` and the shuffle partitions.
+    */
+  private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+
+  /** The session every `main` runs on: [[builder]] at `local[cpus]` with
+    * `cpus` shuffle partitions, logging at WARN. Tests and the benchmark
+    * harness call [[builder]] directly with their own core count.
+    */
+  def start(appName: String): SparkSession = {
+    val spark = builder(appName, s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

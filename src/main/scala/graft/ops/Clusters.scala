@@ -127,11 +127,14 @@ object Clusters {
       // so the aggregate's map-side combine performs the per-neighbor
       // reduction without an extra shuffle. The former
       // `labels.union(propagated)` own-label branch is PROVABLY
-      // redundant (r19): edges are bidirectional and init is the fused
-      // min(own, neighbors), so lbl_t(v) = min over v's t-hop ball, and
-      // for any neighbor u the (t)-ball of u contains the (t)-ball of v
-      // via the back-edge — hence min over neighbors' lbl_t ≤ lbl_t(v),
-      // i.e. neighbor-min EQUALS min(own, neighbor-min) every round, and
+      // redundant (r19). Write B_t(v) for v's closed t-hop ball and
+      // lbl_t for the labels after round t. Init is the fused
+      // min(own, neighbors), so lbl_0(v) = min over B_1(v). Edges are
+      // bidirectional and every node has a neighbour, so for t >= 1 the
+      // union over v's neighbours u of their t-balls is v's (t+1)-ball:
+      // ∪_{u~v} B_t(u) = B_{t+1}(v). By induction the neighbour-min
+      // lbl_t(v) = min over B_{t+1}(v), a ball that holds v itself, so
+      // neighbor-min EQUALS min(own, neighbor-min) every round, and
       // every node survives because every node is an `a` endpoint.
       // Dropping the branch removes a full labels-side scan per round
       // and makes round batching recompute-free (each round's frame is

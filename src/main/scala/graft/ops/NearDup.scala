@@ -241,9 +241,12 @@ object NearDup {
     // safe-by-default (the q151 lesson): a full-corpus call with NO hot-
     // bucket cap sizes its own candidate space first and fails fast with
     // the estimate instead of enumerating a quadratic blowup (bk is
-    // persisted, so the preflight's scan is reused by the join)
+    // persisted, so the preflight's scan is reused by the join). A failed
+    // preflight returns no thunk, so it releases both caches itself.
+    val release = () => { tok.unpersist(false); bk.unpersist(false); () }
     if (sliceMax.isEmpty && hotBandMax.isEmpty)
-      Lsh.preflightFullCorpus(bk, Seq("band", "k1", "k2"), pairBudget)
+      try Lsh.preflightFullCorpus(bk, Seq("band", "k1", "k2"), pairBudget)
+      catch { case scala.util.control.NonFatal(e) => release(); throw e }
     val cand = candidatesFromBands(bk, sliceMax, hotBandMax)
     // wide = MODE-derived (r19, the VERDICT's width condition): the
     // respread pays off exactly when the candidate set is corpus-scale —
@@ -257,7 +260,7 @@ object NearDup {
     val result = verifiedJaccard(cand, tok, "doc_a", "doc_b", threshold,
       wide = sliceMax.isEmpty)
       .orderBy("doc_a", "doc_b")
-    (result, () => { tok.unpersist(false); bk.unpersist(false); () })
+    (result, release)
   }
 
   /** Attach both token sets to candidate pairs (`leftCol`, `rightCol`),

@@ -17,20 +17,11 @@ import org.apache.spark.sql.functions._
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(2000, 4000, 8000)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.etl.Sessions.start("GraftStreamBench")
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     // untimed warmup absorbs codegen/state-store init
-    warm(spark, base, 500)
-    // Locale.ROOT: f-interpolators use the default locale, which can
-    // emit comma decimals and corrupt the JSON lines
-    def fmt(v: Double, d: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${d}f", v)
+    run(spark, base, 500)
+    import graft.Bench.fmt
     val results = sizes.map { n =>
       val t0 = System.nanoTime()
       val rows = run(spark, base, n)
@@ -52,9 +43,6 @@ object StreamBench {
       col("id").as("doc_id"),
       lit(base).as("text"),
       timestamp_seconds(lit(1704067200L) + col("id")).as("ts"))
-
-  private def warm(spark: SparkSession, base: String, n: Int): Unit =
-    run(spark, base, n)
 
   private def run(spark: SparkSession, base: String, n: Int): Long =
     StreamingEtl.streamingNearDup(docs(spark, base, n), maxPerBucket = 256).count()

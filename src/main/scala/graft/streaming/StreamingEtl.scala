@@ -1535,6 +1535,10 @@ object StreamingEtl {
         .parquet(s"$reportDir/batch=$batchId")
     })
 
+  /** Runs `body` on a `*Releasable` result, then calls its release thunk. */
+  private def releasing(obtained: (DataFrame, () => Unit))(body: DataFrame => Unit): Unit =
+    try body(obtained._1) finally obtained._2()
+
   def runDedupGate(
       stream: DataFrame,
       checkpoint: String,
@@ -1552,32 +1556,34 @@ object StreamingEtl {
         // persists tok/bands internally with caller-owned lifetime, and
         // this loop runs once per micro-batch — without the release every
         // batch would pin two more frames in the block manager for the
-        // life of the stream
-        val (withinPairs, releaseWithin) = graft.ops.NearDup
-          .lshNearDupPairsReleasable(docs, sliceMax = None, threshold = threshold)
-        val (storePairs, releaseStore) = graft.ops.NearDup
-          .incrementalNearDupPairsFromStoreReleasable(storePath, docs, threshold)
-        try {
-          val storeDups = storePairs
-            .select(col("doc_id"), col("dup_of"), col("jaccard"),
-              lit("store").as("origin"))
-          val withinDups = withinPairs
-            .select(col("doc_b").as("doc_id"), col("doc_a").as("dup_of"),
-              col("jaccard"), lit("batch").as("origin"))
-          val decisions = storeDups.unionByName(withinDups)
-            .orderBy("doc_id", "dup_of", "origin")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            // overwrite per batch partition: a replayed crash window
-            // rewrites the same rows, never duplicates them
-            decisions.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$decisionsDir/batch=$batchId")
-            val keepers = docs.join(
-              broadcast(decisions.select("doc_id").distinct()),
-              Seq("doc_id"), "left_anti")
-            graft.ops.NearDup.appendSignatureStore(keepers, storePath, batchId = batchId)
-          } finally decisions.unpersist(false)
-        } finally { releaseWithin(); releaseStore(); docs.unpersist(false) }
+        // life of the stream. Each constructor can throw (the pair-budget
+        // preflight, a broken store), so each release is owned by a
+        // finally: a failed batch releases everything obtained before it
+        try releasing(graft.ops.NearDup
+          .lshNearDupPairsReleasable(docs, sliceMax = None, threshold = threshold)) { withinPairs =>
+          releasing(graft.ops.NearDup
+            .incrementalNearDupPairsFromStoreReleasable(storePath, docs, threshold)) { storePairs =>
+            val storeDups = storePairs
+              .select(col("doc_id"), col("dup_of"), col("jaccard"),
+                lit("store").as("origin"))
+            val withinDups = withinPairs
+              .select(col("doc_b").as("doc_id"), col("doc_a").as("dup_of"),
+                col("jaccard"), lit("batch").as("origin"))
+            val decisions = storeDups.unionByName(withinDups)
+              .orderBy("doc_id", "dup_of", "origin")
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try {
+              // overwrite per batch partition: a replayed crash window
+              // rewrites the same rows, never duplicates them
+              decisions.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+                .parquet(s"$decisionsDir/batch=$batchId")
+              val keepers = docs.join(
+                broadcast(decisions.select("doc_id").distinct()),
+                Seq("doc_id"), "left_anti")
+              graft.ops.NearDup.appendSignatureStore(keepers, storePath, batchId = batchId)
+            } finally decisions.unpersist(false)
+          }
+        } finally docs.unpersist(false)
       }
     })
 }

@@ -140,9 +140,12 @@ class FullCorpusSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")).cast("long"))
+    spark.catalog.clearCache()
     val ex = intercept[IllegalArgumentException] {
       NearDup.lshNearDupPairs(hot, sliceMax = None, pairBudget = Some(1000L)).collect()
     }
+    // the failed call returned no release thunk, so it unpersisted its own caches
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed preflight left tok/bk cached")
     assert(ex.getMessage.contains("raw"), s"no estimate in: ${ex.getMessage}")
     assert(ex.getMessage.contains("budget 1000"), s"no budget in: ${ex.getMessage}")
     // the message carries the actual estimate (32 bands x C(200,2) = 636800)

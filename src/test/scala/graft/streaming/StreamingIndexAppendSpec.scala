@@ -228,4 +228,30 @@ class StreamingIndexAppendSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet === decBefore,
       "replayed batches must not rewrite decisions")
   }
+
+  test("dedup gate: a batch that fails on a broken store releases every cache it took") {
+    val in = tmpDir("gate-fail-in")
+    val store = tmpDir("gate-fail-store").toString
+    NearDup.writeSignatureStore(corpus.filter(col("doc_id") % 3 === 0), store)
+    // the manifest still names the tokens data dir, but the dir is gone:
+    // the store probe throws after the within-batch pairs have cached
+    // their token and band frames
+    val tokensDir = StoreManifest.currentSnapshot(spark, store).get
+      .components("tokens").head
+    val broken = new org.apache.hadoop.fs.Path(s"$store/$tokensDir")
+    assert(broken.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(broken, true))
+    writeFile(in, "night1.json",
+      corpus.filter(col("doc_id") % 3 === 1).toJSON.collect().mkString("\n"))
+
+    spark.catalog.clearCache()
+    val e = intercept[Exception](StreamingEtl.runDedupGate(
+      spark.readStream.schema(corpus.schema)
+        .option("maxFilesPerTrigger", 1).json(in.toString),
+      tmpDir("gate-fail-ckpt").toString, store, tmpDir("gate-fail-dec").toString))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(messages.exists(_.contains(tokensDir)), s"gate failed for another reason: $e")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the failed batch left frames pinned in the CacheManager")
+  }
 }
