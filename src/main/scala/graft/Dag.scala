@@ -24,7 +24,10 @@ import graft.report.Summary
   *      raw dir — like the reference, each run re-reads everything landed
   *      so far, not just this batch's files (run_spark_etl_task,
   *      drive_auto_compress_email.py:522-536) — writing cleaned +
-  *      aggregates parquet under `<work>/output`;
+  *      aggregates parquet under `<work>/output`. Unlike the reference,
+  *      which rescans the CSVs for every mode job and again per write,
+  *      a tick parses them once, in parallel, into a cache that every
+  *      ETL step reads;
   *   3. report: when (and only when) this run processed new files, render
   *      the HTML summary over this batch's compression stats and the
   *      latest aggregates, and write it to `<work>/report.html`
@@ -135,7 +138,7 @@ object Dag {
     // promising a retry that will never happen.
     try {
       // Nothing may have landed yet (first run with every file deferred):
-      // an unmatched glob makes spark.read throw, so probe the landing
+      // a CSV read with no matching file throws, so probe the landing
       // zone first and mirror the reference's "no input data" no-op
       // (run_spark_etl_task, drive_auto_compress_email.py:531-535).
       val rawPath = new Path(rawDir)

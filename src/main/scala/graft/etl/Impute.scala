@@ -12,11 +12,14 @@ import org.apache.spark.sql.types._
   * Two implementations:
   *
   *   - [[faithful]]: one aggregation job per column, exactly the reference's
-  *     loop shape. O(C) full scans — kept for semantics documentation and
-  *     A/B testing, not for scale.
-  *   - [[singlePass]] (default): ONE job for every column — melt all columns
+  *     loop shape. O(C) full scans — kept as the reference the specs
+  *     check against, not for scale.
+  *   - [[singlePass]]: ONE job for every column — melt all columns
   *     into (colName, valueString) pairs, count, rank per column. At 100 TB
-  *     this is the difference between C scans of the table and one.
+  *     this is the difference between C scans of the table and one. It is
+  *     [[modes]] followed by [[fillWith]]; a caller that already knows which
+  *     columns hold nulls (see [[Pipeline]]) runs the two halves itself and
+  *     passes [[modes]] only those columns.
   *
   * Deviations from the reference, both deliberate (SURVEY.md §7.4):
   *   - tie-break is deterministic: count desc, then value asc (the reference
@@ -26,7 +29,7 @@ import org.apache.spark.sql.types._
   */
 object Impute {
 
-  private def fillable(dt: DataType): Boolean = dt match {
+  private[etl] def fillable(dt: DataType): Boolean = dt match {
     case StringType | BooleanType => true
     case _: NumericType => true
     case _ => false
@@ -40,6 +43,8 @@ object Impute {
 
   /** Reference-shaped per-column loop: one count+sort+limit(1) job per
     * column (loan_spark_etl.py:55-67), with the deterministic tie-break.
+    * No pipeline path runs it; it is the reference implementation the
+    * specs cross-check [[singlePass]] against.
     */
   def faithful(df: DataFrame): DataFrame = {
     var out = df
@@ -109,8 +114,10 @@ object Impute {
       .toMap
   }
 
-  def singlePass(df: DataFrame): DataFrame = {
-    val m = modes(df)
+  /** Fills each fillable column's nulls with its mode from `m`; columns
+    * without an entry (all-null, or left out of [[modes]]) pass through.
+    */
+  def fillWith(df: DataFrame, m: Map[String, String]): DataFrame = {
     val filled = df.schema.fields.map { f =>
       m.get(f.name) match {
         case Some(v) if fillable(f.dataType) =>
@@ -121,6 +128,5 @@ object Impute {
     df.select(filled.toIndexedSeq: _*)
   }
 
-  /** Default entry: the scalable single-pass variant. */
-  def apply(df: DataFrame): DataFrame = singlePass(df)
+  def singlePass(df: DataFrame): DataFrame = fillWith(df, modes(df))
 }

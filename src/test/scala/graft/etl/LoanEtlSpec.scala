@@ -12,6 +12,17 @@ class LoanEtlSpec extends SparkSpec {
   private val header =
     "loan_id,customer_id,created_at,amount,interest_rate,tenure_months,status,product_type,branch,credit_score_band"
 
+  /** The fixture dir's CSV, read through the dir path: a glob path makes
+    * Spark log a metadata-dir warning with a stack trace.
+    */
+  private def readCsv(dir: java.nio.file.Path) =
+    spark.read.option("header", true).option("inferSchema", true).csv(dir.toString)
+
+  /** The fixture as a glob path over the dir selects it, warning and all. */
+  private def readGlob(dir: java.nio.file.Path) =
+    spark.read.option("header", true).option("inferSchema", true)
+      .csv(s"$dir/*.csv")
+
   test("clean input: pipeline writes cleaned + aggregates with expected shapes") {
     val in = tmpDir("loan_clean_in"); val out = tmpDir("loan_clean_out")
     writeFile(in, "loan_clean.csv",
@@ -55,8 +66,7 @@ class LoanEtlSpec extends SparkSpec {
          |L2,C1,2024-01-15 10:30:00,1000.0,12.5,12,APPROVED,PERSONAL,KTM,A
          |L3,,2024-01-15 10:30:00,,,,,,,
          |""".stripMargin)
-    val df = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$in/*.csv")
+    val df = readCsv(in)
     for (imputed <- Seq(Impute.singlePass(df), Impute.faithful(df))) {
       val r = imputed.filter(col("loan_id") === "L3").collect()(0)
       assert(r.getAs[String]("customer_id") === "C1")
@@ -81,8 +91,7 @@ class LoanEtlSpec extends SparkSpec {
          |L4,C4,2024-01-15 10:30:00,1,1,1,S,P,BR,A
          |L5,C5,2024-01-15 10:30:00,1,1,1,S,P,BR,
          |""".stripMargin)
-    val df = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$in/*.csv")
+    val df = readCsv(in)
     for (imputed <- Seq(Impute.singlePass(df), Impute.faithful(df))) {
       val r = imputed.filter(col("loan_id") === "L5").collect()(0)
       assert(r.getAs[String]("credit_score_band") === "A")
@@ -101,8 +110,7 @@ class LoanEtlSpec extends SparkSpec {
          |L4,C4,2024-01-15 10:30:00,10.0,1,1,S,P,BR,A
          |L5,C5,2024-01-15 10:30:00,,1,1,S,P,BR,A
          |""".stripMargin)
-    val df = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$in/*.csv")
+    val df = readCsv(in)
     for (imputed <- Seq(Impute.singlePass(df), Impute.faithful(df))) {
       val r = imputed.filter(col("loan_id") === "L5").collect()(0)
       assert(r.getAs[Double]("amount") === 9.0)
@@ -116,8 +124,7 @@ class LoanEtlSpec extends SparkSpec {
          |L1,C1,2024-01-15 10:30:00,1000.0,12.5,12,APPROVED,,KTM,A
          |L2,C2,2024-01-16 11:00:00,2000.0,11.0,24,APPROVED,,PKR,B
          |""".stripMargin)
-    val df = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$in/*.csv")
+    val df = readCsv(in)
     for (imputed <- Seq(Impute.singlePass(df), Impute.faithful(df))) {
       assert(imputed.filter(col("product_type").isNull).count() === 2)
     }
@@ -130,8 +137,7 @@ class LoanEtlSpec extends SparkSpec {
         |L1,100.0
         |L2,200.0
         |""".stripMargin)
-    val df = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$in/*.csv")
+    val df = readCsv(in)
     val agg = Aggregates.build(df).collect()
     assert(agg.length === 1)
     assert(agg(0).getAs[Long]("loan_count") === 2L)
@@ -146,8 +152,7 @@ class LoanEtlSpec extends SparkSpec {
         |L2,200.0,APPROVED
         |L3,50.0,REJECTED
         |""".stripMargin)
-    val df = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$in/*.csv")
+    val df = readCsv(in)
     val agg = Aggregates.build(df)
     assert(agg.columns.toSeq === Seq("status", "loan_count", "total_amount"))
     val rows = agg.collect()
@@ -162,8 +167,7 @@ class LoanEtlSpec extends SparkSpec {
          |L1,C1,not-a-date,1,1,1,S,P,BR,A
          |L2,C2,2024-01-15 10:30:00,1,1,1,S,P,BR,A
          |""".stripMargin)
-    val df = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$in/*.csv")
+    val df = readCsv(in)
     val out = Dates.transform(df)
     val bad = out.filter(col("loan_id") === "L1").collect()(0)
     assert(bad.isNullAt(bad.fieldIndex("created_date")))
@@ -175,8 +179,7 @@ class LoanEtlSpec extends SparkSpec {
   test("missing created_at column passes through (loan_spark_etl.py:77)") {
     val in = tmpDir("loan_nodate_in")
     writeFile(in, "loan_nodate.csv", "loan_id,amount\nL1,100.0\n")
-    val df = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$in/*.csv")
+    val df = readCsv(in)
     val out = Dates.transform(df)
     assert(out.columns.toSeq === df.columns.toSeq)
   }
@@ -188,8 +191,7 @@ class LoanEtlSpec extends SparkSpec {
         |L1,N/A,APPROVED
         |L2,250.5,APPROVED
         |""".stripMargin)
-    val df = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$in/*.csv")
+    val df = readCsv(in)
     assert(df.schema("amount").dataType === StringType)
     val rows = Aggregates.build(df).collect()
     assert(rows(0).getAs[Long]("loan_count") === 2L)
@@ -248,5 +250,101 @@ class LoanEtlSpec extends SparkSpec {
     assert(summary.head("status") === "APPROVED")
     // nonexistent dir → empty, not an exception (loan_spark_etl.py:202-204,216)
     assert(Aggregates.latestSummary(spark, "/nonexistent/dir") === Seq.empty)
+  }
+
+  test("pipeline output equals single-pass imputation + date split, row for row") {
+    val in = tmpDir("loan_ident_in"); val out = tmpDir("loan_ident_out")
+    // nulls in a string, an int, a double, a group key (status) and amount;
+    // loan_id and branch are null-free, credit_score_band is all-null
+    writeFile(in, "loan_a.csv",
+      s"""$header
+         |L1,C1,2024-01-15 10:30:00,100.5,12.5,12,APPROVED,PERSONAL,KTM,
+         |L2,,2024-01-16 11:00:00,,11.0,,APPROVED,HOME,PKR,
+         |L3,C1,2024-01-17 12:00:00,100.5,,24,,PERSONAL,KTM,
+         |L4,C2,not-a-date,300.0,11.0,24,PENDING,,BRT,
+         |""".stripMargin)
+    writeFile(in, "loan_b.csv",
+      s"""$header
+         |L5,C2,2024-02-01 09:15:00,,10.0,36,,AUTO,KTM,
+         |L6,,2024-02-02 08:00:00,250.0,,,REJECTED,HOME,PKR,
+         |L7,C3,,250.0,10.0,12,APPROVED,AUTO,BRT,
+         |""".stripMargin)
+    writeFile(in, "loan_c.csv", s"$header\n")
+    // small splits: several scan partitions, so coalesce(1) must keep
+    // their order
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "256")
+    try {
+      val res = Pipeline.run(spark, in.toString, out.toString).get
+      val read = readGlob(in)
+      assert(read.rdd.getNumPartitions > 1)
+      val expected = Dates.transform(Impute.singlePass(read))
+      assert(res.rowCount === 7)
+
+      val cleaned = spark.read.parquet(res.cleanedPath)
+      assert(cleaned.schema.map(f => f.name -> f.dataType) ===
+        expected.schema.map(f => f.name -> f.dataType))
+      assert(cleaned.collect().toSeq === expected.coalesce(1).collect().toSeq)
+      assert(cleaned.filter(col("credit_score_band").isNotNull).count() === 0)
+
+      val agg = spark.read.parquet(res.aggregatesPath)
+      assert(agg.collect().toSeq === Aggregates.build(expected).collect().toSeq)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("pipeline releases its cache on Some, None and failure") {
+    def assertReleased(what: String): Unit = {
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty, s"$what: RDD left persisted")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$what: CacheManager not empty")
+    }
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
+    assertReleased("before")
+
+    val in = tmpDir("loan_release_in"); val out = tmpDir("loan_release_out")
+    writeFile(in, "loan_a.csv",
+      s"$header\nL1,,2024-01-15 10:30:00,100.0,1,1,APPROVED,PERSONAL,KTM,A\n")
+    assert(Pipeline.run(spark, in.toString, out.toString).isDefined)
+    assertReleased("Some")
+
+    val empty = tmpDir("loan_release_empty")
+    writeFile(empty, "loan_h.csv", s"$header\n")
+    assert(Pipeline.run(spark, empty.toString, out.toString) === None)
+    assertReleased("None")
+
+    // the output dir is a plain file: the cleaned write cannot create it
+    val blocked = writeFile(out, "blocked", "not a dir")
+    intercept[Exception] {
+      Pipeline.run(spark, in.toString, blocked.toString)
+    }
+    assertReleased("failure")
+  }
+
+  test("pipeline reads the glob's files only: no in-flight, .crc or non-matching file") {
+    val in = tmpDir("loan_files_in"); val out = tmpDir("loan_files_out")
+    // written through Hadoop's local filesystem, which adds .crc siblings
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    def put(name: String, rows: String*): Unit = {
+      val o = fs.create(new org.apache.hadoop.fs.Path(in.toString, name))
+      try o.write((header +: rows).mkString("", "\n", "\n").getBytes("UTF-8"))
+      finally o.close()
+    }
+    put("loan_a.csv", "L1,C1,2024-01-15 10:30:00,100.0,1,1,APPROVED,PERSONAL,KTM,A")
+    put("loan_b.csv", "L2,C2,2024-01-16 11:00:00,200.0,1,1,PENDING,HOME,PKR,B")
+    put("loan_c.txt", "X1,C9,2024-01-16 11:00:00,900.0,1,1,CLOSED,GOLD,BRT,D")
+    // FileIngest's publish name for a file still being written
+    put(".loan_x.csv.inprogress-t", "X2,C9,2024-01-16 11:00:00,900.0,1,1,CLOSED,GOLD,BRT,D")
+    assert(java.nio.file.Files.exists(in.resolve(".loan_a.csv.crc")))
+
+    val res = Pipeline.run(spark, in.toString, out.toString).get
+    val viaGlob = readGlob(in)
+    assert(res.rowCount === viaGlob.count())
+    val ids = spark.read.parquet(res.cleanedPath).select("loan_id").collect().map(_.getString(0))
+    assert(ids.sorted.toSeq === Seq("L1", "L2"))
+    assert(ids.toSet === viaGlob.select("loan_id").collect().map(_.getString(0)).toSet)
   }
 }
