@@ -12,8 +12,18 @@ The one-minute load average is recorded before every run. For every
 `end_to_end` metric in the parent's BENCHMARK.json it prints each side's
 median and quartiles, the change/parent ratio of the medians, how many
 seeds the change won (by the metric's `better` direction; ties count for
-neither side), and the per-seed ratios. Exits 1 if any run is incorrect
-or produces no result line.
+neither side), the per-seed ratios and a verdict:
+
+  gain        the change won at least 9 of 10 pairs and its median beats
+              the parent's by more than the parent's interquartile range
+  regression  the change's median is worse than the parent's by more than
+              the metric's `bound` (a fraction of the parent's median)
+  flat        the medians differ by no more than the parent's IQR, and
+              that IQR is within the bound
+  unresolved  anything else: a move beyond the IQR that is neither, or a
+              parent spread wider than the bound
+
+Exits 1 if any run is incorrect or produces no result line.
 """
 import argparse
 import json
@@ -30,6 +40,25 @@ def loadavg():
 
 def ratio(parent, change):
     return change / parent if parent else float("nan")
+
+
+def verdict(pairs, better, bound):
+    """The verdict line of one metric from its (parent, change) pairs."""
+    parent = [p for p, _ in pairs]
+    pm = statistics.median(parent)
+    cm = statistics.median(c for _, c in pairs)
+    sign = 1 if better == "higher" else -1
+    gap = sign * (cm - pm)  # > 0: the change is better
+    q = statistics.quantiles(parent, n=4) if len(parent) > 1 else [pm] * 3
+    iqr = q[2] - q[0]
+    wins = sum(1 for p, c in pairs if sign * (c - p) > 0)
+    if wins >= 0.9 * len(pairs) and gap > iqr:
+        return "gain"
+    if -gap > bound * abs(pm):
+        return "regression"
+    if abs(gap) <= iqr <= bound * abs(pm):
+        return "flat"
+    return "unresolved"
 
 
 def run_once(checkout, workload, seed, seconds):
@@ -78,8 +107,9 @@ def main():
 
     print(f"\n{a.workload}, {len(a.seeds)} seeds {a.seeds}")
     print(f"{'metric':28s} {'parent median [q1, q3]':>30s} {'change median [q1, q3]':>30s} "
-          f"{'ratio':>6s} {'wins':>5s}  per-seed ratios")
+          f"{'ratio':>6s} {'wins':>5s} {'verdict':>10s}  per-seed ratios")
     better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    bound = {m["name"]: m["bound"] for m in bench["end_to_end"]}
     for m in metrics:
         pairs = [(p, c) for p, c in zip(values["parent"][m], values["change"][m])
                  if p is not None and c is not None]
@@ -96,7 +126,8 @@ def main():
         wins = sum(1 for p, c in pairs if sign * (c - p) > 0)
         per_seed = " ".join(f"{ratio(p, c):.3f}" for p, c in pairs)
         print(f"{m:28s} {cols[0]:>30s} {cols[1]:>30s} {ratio(pm, cm):6.3f} "
-              f"{wins:2d}/{len(pairs):<2d}  {per_seed}")
+              f"{wins:2d}/{len(pairs):<2d} {verdict(pairs, better[m], bound[m]):>10s}  "
+              f"{per_seed}")
     if not ok:
         print("at least one run was incorrect or failed", file=sys.stderr)
         sys.exit(1)

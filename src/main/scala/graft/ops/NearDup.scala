@@ -112,6 +112,9 @@ object NearDup {
       .select(col("doc_id") +:
         (0 until K).map(i => element_at(col("sig"), i + 1).as(s"m$i")): _*)
 
+  /** The equi-join key of a [[bands]] frame: a candidate pair shares one. */
+  private[graft] val BandKeys = Seq("band", "k1", "k2")
+
   /** Explode a signature frame into (doc_id, band, k1, k2) band keys. */
   def bands(sig: DataFrame): DataFrame = {
     val bandStructs = (0 until Bands).map { b =>
@@ -194,32 +197,21 @@ object NearDup {
     *     split across reducers by AQE's skew-join handling; `hotBandMax`
     *     optionally drops degenerate buckets outright (see
     *     [[Lsh.guardHotBuckets]] for the recall argument).
+    *
+    * Cache lifetime is CALLER-OWNED: the token and band frames are
+    * persisted here and read lazily by the returned plan, so a
+    * long-lived session clears them via `spark.catalog.clearCache()`
+    * when done with the result. A loop that runs once per micro-batch
+    * must not call it — it would pin two frames per batch for the life
+    * of the stream; [[graft.streaming.StreamingEtl.runDedupGate]]
+    * signs its batch itself and releases the frames in a `finally`.
     */
   def lshNearDupPairs(
       docs: DataFrame,
       sliceMax: Option[Long] = Some(100L),
       threshold: Double = 0.5,
       hotBandMax: Option[Long] = None,
-      pairBudget: Option[Long] = Some(Lsh.DefaultPairBudget)): DataFrame =
-    lshNearDupPairsReleasable(docs, sliceMax, threshold, hotBandMax,
-      pairBudget)._1
-
-  /** [[lshNearDupPairs]] plus a release thunk that unpersists the two
-    * internal caches (tok, band keys) — for callers that CANNOT own the
-    * cache lifetime: a long-lived streaming loop calling the plain form
-    * once per micro-batch would pin two new frames in the block manager
-    * every batch for the life of the stream (the r18 ADVICE leak;
-    * DataFrame persists are held by the CacheManager, not reference-
-    * tracked away like localCheckpoint blocks). Call the thunk after
-    * the result has been fully consumed (written/collected) — the
-    * returned plan reads both caches lazily.
-    */
-  def lshNearDupPairsReleasable(
-      docs: DataFrame,
-      sliceMax: Option[Long] = Some(100L),
-      threshold: Double = 0.5,
-      hotBandMax: Option[Long] = None,
-      pairBudget: Option[Long] = Some(Lsh.DefaultPairBudget)): (DataFrame, () => Unit) = {
+      pairBudget: Option[Long] = Some(Lsh.DefaultPairBudget)): DataFrame = {
     // Both `tok` and `bk` are consumed more than once (tok: signatures + the
     // two verification attaches; bk: both sides of the candidate self-join).
     // Persist them so each lineage is computed exactly once — without this
@@ -232,22 +224,20 @@ object NearDup {
     // broadcasting (the build side flips to tok), and the CPU-bound exact-
     // Jaccard verify then runs on the AQE byte-coalesced 3-task distinct
     // output instead of map-side over the 32 cached columnar partitions.
-    // Cache lifetime is CALLER-OWNED (the [[incrementalNearDupPairs]] /
-    // [[containmentPairs]] discipline): the returned plan is lazy, so a
-    // long-lived session clears these via spark.catalog.clearCache() when
-    // done with the result.
     val tok = tokens(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bk = bands(signatures(tok)).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // safe-by-default (the q151 lesson): a full-corpus call with NO hot-
     // bucket cap sizes its own candidate space first and fails fast with
     // the estimate instead of enumerating a quadratic blowup (bk is
     // persisted, so the preflight's scan is reused by the join). A failed
-    // preflight returns no thunk, so it releases both caches itself.
-    val release = () => { tok.unpersist(false); bk.unpersist(false); () }
+    // preflight hands the caller no plan to own, so it releases both
+    // caches itself.
     if (sliceMax.isEmpty && hotBandMax.isEmpty)
-      try Lsh.preflightFullCorpus(bk, Seq("band", "k1", "k2"), pairBudget)
-      catch { case scala.util.control.NonFatal(e) => release(); throw e }
-    val cand = candidatesFromBands(bk, sliceMax, hotBandMax)
+      try Lsh.preflightFullCorpus(bk, BandKeys, pairBudget)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          bk.unpersist(false); tok.unpersist(false); throw e
+      }
     // wide = MODE-derived (r19, the VERDICT's width condition): the
     // respread pays off exactly when the candidate set is corpus-scale —
     // the full-corpus self-join modes (q151's sourceDupMatrix, unsliced
@@ -257,10 +247,9 @@ object NearDup {
     // persisted tok cache, and the r18 close bench measured the extra
     // exchange at 1.2-1.4× net-negative there (q25 0.69×, q78 1.42×
     // pre-gate) — so bounded modes run wide=false, as r17 did.
-    val result = verifiedJaccard(cand, tok, "doc_a", "doc_b", threshold,
-      wide = sliceMax.isEmpty)
+    verifiedJaccard(candidatesFromBands(bk, sliceMax, hotBandMax), tok,
+      "doc_a", "doc_b", threshold, wide = sliceMax.isEmpty)
       .orderBy("doc_a", "doc_b")
-    (result, release)
   }
 
   /** Attach both token sets to candidate pairs (`leftCol`, `rightCol`),
@@ -269,7 +258,7 @@ object NearDup {
     * forms so the verify arithmetic can never drift between them (q78's
     * bit-equality spec depends on it).
     */
-  private def verifiedJaccard(
+  private[graft] def verifiedJaccard(
       cand: DataFrame,
       tok: DataFrame,
       leftCol: String,
@@ -310,10 +299,9 @@ object NearDup {
       bk: DataFrame,
       sliceMax: Option[Long],
       hotBandMax: Option[Long]): DataFrame = {
-    val keys = Seq("band", "k1", "k2")
-    val guarded = Lsh.guardHotBuckets(bk, keys, hotBandMax)
+    val guarded = Lsh.guardHotBuckets(bk, BandKeys, hotBandMax)
     val lhs = guarded.select(col("doc_id").as("doc_a"), col("band"), col("k1"), col("k2"))
-    Lsh.candidateJoin(guarded, lhs, keys, "doc_a", sliceMax)
+    Lsh.candidateJoin(guarded, lhs, BandKeys, "doc_a", sliceMax)
       .filter(col("doc_a") < col("doc_id"))
       .select(col("doc_a"), col("doc_id").as("doc_b"))
       .distinct()
@@ -356,7 +344,7 @@ object NearDup {
       .select(col("doc_id").as("new_id"), col("band"), col("k1"), col("k2"))
     val baseBk = bk.filter(col("doc_id") % deltaMod =!= 0)
     val cand = baseBk
-      .join(broadcast(deltaBk), Seq("band", "k1", "k2"))
+      .join(broadcast(deltaBk), BandKeys)
       .select(col("new_id"), col("doc_id").as("base_id"))
       .distinct()
     verifiedJaccard(cand, tok, "new_id", "base_id", threshold, wide = false)
@@ -526,18 +514,37 @@ object NearDup {
       "bands" -> Seq(StoreManifest.componentDir("bands", 1L)))))
   }
 
+  /** Reader schemas of the stored tokens and bands, as [[tokens]] and
+    * [[bands]] write them: an explicit schema spares parquet one
+    * schema-inference job per data dir read, and a probed store gains
+    * two dirs per appended batch (the Retrieval/AnnPq store discipline).
+    */
+  private val StoreSchemas = Map(
+    "tokens" -> "doc_id LONG, toks ARRAY<STRING>",
+    "bands" -> "doc_id LONG, band INT, k1 LONG, k2 LONG")
+
+  private def storeComponent(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      snap: StoreManifest.Snapshot,
+      name: String): Option[DataFrame] =
+    StoreManifest.readComponent(spark, path, snap, name, StoreSchemas.get(name))
+
   /** One batch's tokens/bands data dirs for snapshot `v` (immutable
     * once the manifest referencing them publishes).
     */
   private def writeSignatureBatch(docs: DataFrame, path: String, v: Long): Unit = {
     val tok = tokens(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      tok.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/${StoreManifest.componentDir("tokens", v)}")
-      bands(signatures(tok))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/${StoreManifest.componentDir("bands", v)}")
-    } finally tok.unpersist(false)
+    try writeSignedBatch(tok, bands(signatures(tok)), path, v)
+    finally tok.unpersist(false)
+  }
+
+  /** [[writeSignatureBatch]] for a batch that is already signed. */
+  private def writeSignedBatch(tok: DataFrame, bk: DataFrame, path: String, v: Long): Unit = {
+    tok.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$path/${StoreManifest.componentDir("tokens", v)}")
+    bk.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$path/${StoreManifest.componentDir("bands", v)}")
   }
 
   /** Append one delta batch's token sets + band keys to the store — the
@@ -550,13 +557,29 @@ object NearDup {
     * before any write.
     */
   def appendSignatureStore(
-      delta: DataFrame, path: String, batchId: Long = -1L): Unit = {
-    val spark = delta.sparkSession
+      delta: DataFrame, path: String, batchId: Long = -1L): Unit =
+    appendToStore(delta.sparkSession, path, batchId)(writeSignatureBatch(delta, path, _))
+
+  /** [[appendSignatureStore]] for a batch that is already signed: `tok`
+    * ([[tokens]]) and `bk` ([[bands]]) are written as they are, so
+    * nothing is tokenized or signed again. Same watermark check and
+    * single publish.
+    */
+  private[graft] def appendSignedBatch(
+      tok: DataFrame, bk: DataFrame, path: String, batchId: Long): Unit =
+    appendToStore(tok.sparkSession, path, batchId)(writeSignedBatch(tok, bk, path, _))
+
+  /** The append protocol: check the watermark, write the data dirs of
+    * the next version, then publish them in one manifest.
+    */
+  private def appendToStore(
+      spark: org.apache.spark.sql.SparkSession, path: String, batchId: Long)(
+      write: Long => Unit): Unit = {
     val cur = StoreManifest.currentSnapshot(spark, path)
       .getOrElse(sys.error(s"signature store $path does not exist — write it first"))
     if (batchId >= 0 && batchId <= cur.batchWatermark) return // replay — already folded
     val v = cur.version + 1
-    writeSignatureBatch(delta, path, v)
+    write(v)
     StoreManifest.publish(spark, path, cur
       .appending("tokens", StoreManifest.componentDir("tokens", v))
       .appending("bands", StoreManifest.componentDir("bands", v))
@@ -581,12 +604,6 @@ object NearDup {
       .copy(version = v))
   }
 
-  private def storeTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      snap: StoreManifest.Snapshot): Option[DataFrame] =
-    StoreManifest.readComponent(spark, path, snap, "tombstones")
-
   /** Fold the tombstones into the store files: rewrite tokens/bands
     * minus tombstoned docs into fresh data dirs, publish a manifest
     * referencing only those (tombstones gone). Never in-place and never
@@ -600,11 +617,11 @@ object NearDup {
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     val cur = StoreManifest.currentSnapshot(spark, path)
       .getOrElse(sys.error(s"signature store $path does not exist"))
-    storeTombstones(spark, path, cur).foreach { tomb =>
+    storeComponent(spark, path, cur, "tombstones").foreach { tomb =>
       val t = broadcast(tomb.select("doc_id"))
       val v = cur.version + 1
       Seq("tokens", "bands").foreach { name =>
-        StoreManifest.readComponent(spark, path, cur, name).get
+        storeComponent(spark, path, cur, name).get
           .join(t, Seq("doc_id"), "left_anti")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$path/${StoreManifest.componentDir(name, v)}")
@@ -625,7 +642,8 @@ object NearDup {
     * contract and verify arithmetic as the in-memory form (parity
     * spec-pinned bit-for-bit); `delta` must carry doc_ids disjoint from
     * the stored corpus (the ingest contract a ledgered pipeline already
-    * guarantees).
+    * guarantees). Sign, then [[probeSignatureStore]] — the streaming
+    * dedup gate runs the same probe on the batch it signed once.
     *
     * Cache lifetime is CALLER-OWNED for the delta token frame (consumed
     * by both the signature pass and the Jaccard verify of the returned
@@ -635,44 +653,47 @@ object NearDup {
       storePath: String,
       delta: DataFrame,
       threshold: Double = 0.5,
-      asOfVersion: Option[Long] = None): DataFrame =
-    incrementalNearDupPairsFromStoreReleasable(
-      storePath, delta, threshold, asOfVersion)._1
-
-  /** [[incrementalNearDupPairsFromStore]] plus a release thunk for the
-    * internal delta-token persist — the streaming micro-batch caller's
-    * form (see [[lshNearDupPairsReleasable]] for the leak rationale).
-    */
-  def incrementalNearDupPairsFromStoreReleasable(
-      storePath: String,
-      delta: DataFrame,
-      threshold: Double = 0.5,
-      asOfVersion: Option[Long] = None): (DataFrame, () => Unit) = {
+      asOfVersion: Option[Long] = None): DataFrame = {
     val spark = delta.sparkSession
     val snap = asOfVersion
       .map(v => StoreManifest.snapshotAt(spark, storePath, v))
       .orElse(StoreManifest.currentSnapshot(spark, storePath))
       .getOrElse(sys.error(s"signature store $storePath does not exist"))
-    def live(df: DataFrame): DataFrame =
-      storeTombstones(spark, storePath, snap).fold(df)(t =>
-        df.join(broadcast(t.select("doc_id")), Seq("doc_id"), "left_anti"))
-    val baseTok = live(StoreManifest.readComponent(spark, storePath, snap, "tokens").get)
-    val baseBk = live(StoreManifest.readComponent(spark, storePath, snap, "bands").get)
     val deltaTok = tokens(delta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deltaBk = bands(signatures(deltaTok))
-      .select(col("doc_id").as("new_id"), col("band"), col("k1"), col("k2"))
+    probeSignatureStore(storePath, snap, deltaTok, bands(signatures(deltaTok)), threshold)
+      .orderBy("doc_id", "dup_of")
+  }
+
+  /** Probe snapshot `snap` of a signature store with a signed batch —
+    * `tok` from [[tokens]], `bk` from [[bands]]: `bk` is broadcast
+    * against the stored bands, and each candidate is verified with
+    * exact Jaccard against the stored tokens ∪ `tok`. Tombstoned docs
+    * are anti-joined out of both stored frames. Output
+    * (doc_id, dup_of, jaccard), unordered.
+    */
+  private[graft] def probeSignatureStore(
+      storePath: String,
+      snap: StoreManifest.Snapshot,
+      tok: DataFrame,
+      bk: DataFrame,
+      threshold: Double): DataFrame = {
+    val spark = tok.sparkSession
+    def live(df: DataFrame): DataFrame =
+      storeComponent(spark, storePath, snap, "tombstones").fold(df)(t =>
+        df.join(broadcast(t.select("doc_id")), Seq("doc_id"), "left_anti"))
+    val baseTok = live(storeComponent(spark, storePath, snap, "tokens").get)
+    val baseBk = live(storeComponent(spark, storePath, snap, "bands").get)
+    val deltaBk = bk.select(col("doc_id").as("new_id"), col("band"), col("k1"), col("k2"))
     val cand = baseBk
-      .join(broadcast(deltaBk), Seq("band", "k1", "k2"))
+      .join(broadcast(deltaBk), BandKeys)
       .select(col("new_id"), col("doc_id").as("base_id"))
       .distinct()
     // doc_ids are disjoint, so one unioned token frame serves both
     // verify attaches — the exact arithmetic stays verifiedJaccard's
-    val result = verifiedJaccard(cand, baseTok.unionByName(deltaTok),
+    verifiedJaccard(cand, baseTok.unionByName(tok),
       "new_id", "base_id", threshold, wide = false)
       .select(col("new_id").as("doc_id"), col("base_id").as("dup_of"), col("jaccard"))
-      .orderBy("doc_id", "dup_of")
-    (result, () => { deltaTok.unpersist(false); () })
   }
 
   /** Full-corpus duplicate clusters at LINEAR candidate cost — the shape a

@@ -1412,31 +1412,6 @@ object StreamingEtl {
     q.awaitTermination()
   }
 
-  /** Streaming near-dup ADMISSION GATE over the persisted signature
-    * store — the nightly-crawl loop composed end-to-end. Per micro-batch:
-    *
-    *   1. probe the CURRENT store for near-dups of the batch's docs
-    *      (store side = everything admitted by earlier batches — base
-    *      corpus plus every prior night's keepers);
-    *   2. within-batch dedup (full batch, no slice): a doc that pairs
-    *      with ANY other batch doc and is not that pair's minimum is
-    *      dropped — the conservative pairwise min-keeper (a dup of a
-    *      dropped doc is still dropped; transitive chains keep only
-    *      minima), the q66 keeper-election rule at gate granularity;
-    *   3. admit the keepers: append ONLY them to the store, and write
-    *      the rejection decisions (doc_id, dup_of, jaccard, origin) to
-    *      `decisionsDir/batch=<id>`.
-    *
-    * Exactly-once under at-least-once delivery: the store append rides
-    * the manifest `batchWatermark` ([[runIndexAppend]]'s contract), and
-    * the gate checks that watermark FIRST — a replayed batch id is
-    * skipped entirely (no probe, no decision rewrite, no publish), so
-    * the decisions dir and the store can never disagree about a batch.
-    * A crash after the decisions write but before the store publish
-    * replays the batch: the watermark is still behind, the probe
-    * re-runs against the identical store state, and the decisions
-    * overwrite with identical rows — idempotent end to end.
-    */
   /** Streaming distribution-drift gate — q147's PSI audit as a per-
     * batch contract check: every micro-batch's value histogram is
     * scored against a PERSISTED reference histogram (the training
@@ -1535,10 +1510,44 @@ object StreamingEtl {
         .parquet(s"$reportDir/batch=$batchId")
     })
 
-  /** Runs `body` on a `*Releasable` result, then calls its release thunk. */
-  private def releasing(obtained: (DataFrame, () => Unit))(body: DataFrame => Unit): Unit =
-    try body(obtained._1) finally obtained._2()
-
+  /** Streaming near-dup ADMISSION GATE over the persisted signature
+    * store — the nightly-crawl loop composed end-to-end. Per micro-batch:
+    *
+    *   1. sign the batch once: its token frame and band-key frame are
+    *      persisted, and every later step reads those two frames;
+    *   2. preflight the within-batch candidate space
+    *      ([[graft.ops.Lsh.preflightFullCorpus]], default pair budget) —
+    *      the action that fills both caches;
+    *   3. probe the CURRENT store for near-dups of the batch's docs
+    *      (store side = everything admitted by earlier batches — base
+    *      corpus plus every prior night's keepers), and pair the batch
+    *      with itself (full batch, no slice);
+    *   4. decide: a doc that pairs with a stored doc, or with another
+    *      batch doc and is not that pair's minimum, is rejected — the
+    *      conservative pairwise min-keeper (a dup of a dropped doc is
+    *      still dropped; transitive chains keep only minima), the q66
+    *      keeper-election rule at gate granularity. The decisions
+    *      (doc_id, dup_of, jaccard, origin) land at
+    *      `decisionsDir/batch=<id>` as one file sorted by
+    *      (doc_id, dup_of, origin);
+    *   5. admit the keepers: the signed frames minus the rejected ids
+    *      are appended to the store — nothing is tokenized or signed
+    *      again.
+    *
+    * Exactly-once under at-least-once delivery: the store append rides
+    * the manifest `batchWatermark` ([[runIndexAppend]]'s contract), and
+    * the gate checks that watermark FIRST — a replayed batch id is
+    * skipped entirely (no probe, no decision rewrite, no publish), so
+    * the decisions dir and the store can never disagree about a batch.
+    * A crash after the decisions write but before the store publish
+    * replays the batch: the watermark is still behind, the probe
+    * re-runs against the identical store state, and the decisions
+    * overwrite with identical rows — idempotent end to end.
+    *
+    * Every frame the batch persists is released in a `finally`, on the
+    * failure path too: the loop runs once per micro-batch for the life
+    * of the stream.
+    */
   def runDedupGate(
       stream: DataFrame,
       checkpoint: String,
@@ -1551,39 +1560,46 @@ object StreamingEtl {
         .getOrElse(sys.error(
           s"signature store $storePath does not exist — write the base corpus first"))
       if (batchId > cur.batchWatermark) {
-        val docs = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // releasable form (r19, the r18 ADVICE leak): the plain call
-        // persists tok/bands internally with caller-owned lifetime, and
-        // this loop runs once per micro-batch — without the release every
-        // batch would pin two more frames in the block manager for the
-        // life of the stream. Each constructor can throw (the pair-budget
-        // preflight, a broken store), so each release is owned by a
-        // finally: a failed batch releases everything obtained before it
-        try releasing(graft.ops.NearDup
-          .lshNearDupPairsReleasable(docs, sliceMax = None, threshold = threshold)) { withinPairs =>
-          releasing(graft.ops.NearDup
-            .incrementalNearDupPairsFromStoreReleasable(storePath, docs, threshold)) { storePairs =>
-            val storeDups = storePairs
-              .select(col("doc_id"), col("dup_of"), col("jaccard"),
-                lit("store").as("origin"))
-            val withinDups = withinPairs
-              .select(col("doc_b").as("doc_id"), col("doc_a").as("dup_of"),
-                col("jaccard"), lit("batch").as("origin"))
-            val decisions = storeDups.unionByName(withinDups)
-              .orderBy("doc_id", "dup_of", "origin")
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              // overwrite per batch partition: a replayed crash window
-              // rewrites the same rows, never duplicates them
-              decisions.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"$decisionsDir/batch=$batchId")
-              val keepers = docs.join(
-                broadcast(decisions.select("doc_id").distinct()),
-                Seq("doc_id"), "left_anti")
-              graft.ops.NearDup.appendSignatureStore(keepers, storePath, batchId = batchId)
-            } finally decisions.unpersist(false)
-          }
-        } finally docs.unpersist(false)
+        import graft.ops.{Lsh, NearDup}
+        val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+        // built before anything is persisted, so a frame that fails to
+        // analyse leaves no cache behind; persisted in dependency order
+        // and released in reverse, so no dependent cache is re-planned
+        val tok = NearDup.tokens(batch)
+        val bk = NearDup.bands(NearDup.signatures(tok))
+        val cached = Seq(batch, tok, bk)
+        cached.foreach(_.persist(level))
+        try {
+          Lsh.preflightFullCorpus(bk, NearDup.BandKeys, Some(Lsh.DefaultPairBudget))
+          val storeDups = NearDup.probeSignatureStore(storePath, cur, tok, bk, threshold)
+            .select(col("doc_id"), col("dup_of"), col("jaccard"), lit("store").as("origin"))
+          // batch-sized candidates verify map-side against the tok cache
+          // (the bounded-mode reason lshNearDupPairs gives for wide = false)
+          val withinDups = NearDup.verifiedJaccard(
+            NearDup.candidatesFromBands(bk, None, None), tok, "doc_a", "doc_b",
+            threshold, wide = false)
+            .select(col("doc_b").as("doc_id"), col("doc_a").as("dup_of"),
+              col("jaccard"), lit("batch").as("origin"))
+          val decisions = storeDups.unionByName(withinDups).persist(level)
+          try {
+            // the action that fills the decisions cache; at most one id
+            // per batch doc
+            val rejected = decisions.select("doc_id").distinct()
+              .collect().map(_.get(0))
+            // overwrite per batch partition: a replayed crash window
+            // rewrites the same rows, never duplicates them. One file,
+            // sorted in its partition: no range-sampling job
+            decisions.coalesce(1).sortWithinPartitions("doc_id", "dup_of", "origin")
+              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+              .parquet(s"$decisionsDir/batch=$batchId")
+            // a null doc_id is never rejected, so it is kept (NOT IN alone
+            // would drop it)
+            def keepers(df: DataFrame): DataFrame =
+              if (rejected.isEmpty) df
+              else df.filter(!coalesce(col("doc_id").isin(rejected.toSeq: _*), lit(false)))
+            NearDup.appendSignedBatch(keepers(tok), keepers(bk), storePath, batchId)
+          } finally decisions.unpersist(false)
+        } finally cached.reverse.foreach(_.unpersist(false))
       }
     })
 }

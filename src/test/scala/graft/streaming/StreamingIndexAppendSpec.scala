@@ -20,6 +20,40 @@ class StreamingIndexAppendSpec extends SparkSpec {
   private def corpus = spark.read.parquet(s"$sf/documents.parquet")
     .select("doc_id", "text")
 
+  private def component(dir: String, name: String): Set[Seq[Any]] = {
+    val sn = StoreManifest.currentSnapshot(spark, dir).get
+    StoreManifest.readComponent(spark, dir, sn, name)
+      .map(_.collect().map(_.toSeq).toSet).getOrElse(Set.empty)
+  }
+
+  /** The dedup gate's admission step through the batch APIs: probe the
+    * store, pair the batch with itself, append the keepers. Returns the
+    * (doc_id, dup_of) decisions.
+    */
+  private def foldBatch(store: String, s: org.apache.spark.sql.DataFrame): Set[Seq[Any]] = {
+    val storeDups = NearDup.incrementalNearDupPairsFromStore(store, s)
+      .select(col("doc_id"), col("dup_of"))
+    val withinDups = NearDup.lshNearDupPairs(s, sliceMax = None)
+      .select(col("doc_b").as("doc_id"), col("doc_a").as("dup_of"))
+    val losers = storeDups.unionByName(withinDups)
+      .select("doc_id").distinct()
+    val keepers = s.join(losers, Seq("doc_id"), "left_anti")
+    val dec = storeDups.unionByName(withinDups)
+      .collect().map(_.toSeq).toSet
+    NearDup.appendSignatureStore(keepers, store)
+    dec
+  }
+
+  private def releaseAll(): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
+  }
+
+  private def assertReleased(what: String): Unit = {
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty, s"$what: RDD left persisted")
+    assert(spark.sharedState.cacheManager.isEmpty, s"$what: CacheManager not empty")
+  }
+
   test("postings store: streamed appends across a restart == batch-built store; replay ignored") {
     val in = tmpDir("idx-in")
     val ckpt = tmpDir("idx-ckpt")
@@ -58,11 +92,6 @@ class StreamingIndexAppendSpec extends SparkSpec {
     Retrieval.writePostingsStore(s0, batchStore)
     Retrieval.appendPostingsStore(s1, batchStore)
     Retrieval.appendPostingsStore(s2, batchStore)
-    def component(dir: String, name: String): Set[Seq[Any]] = {
-      val sn = StoreManifest.currentSnapshot(spark, dir).get
-      StoreManifest.readComponent(spark, dir, sn, name)
-        .map(_.collect().map(_.toSeq).toSet).getOrElse(Set.empty)
-    }
     for (name <- Seq("postings", "stats", "doclens"))
       assert(component(streamStore, name) === component(batchStore, name),
         s"streamed store component $name diverged from the batch build")
@@ -99,11 +128,6 @@ class StreamingIndexAppendSpec extends SparkSpec {
     NearDup.writeSignatureStore(s0, batchStore)
     NearDup.appendSignatureStore(s1, batchStore)
     NearDup.appendSignatureStore(s2, batchStore)
-    def component(dir: String, name: String): Set[Seq[Any]] = {
-      val sn = StoreManifest.currentSnapshot(spark, dir).get
-      StoreManifest.readComponent(spark, dir, sn, name)
-        .map(_.collect().map(_.toSeq).toSet).getOrElse(Set.empty)
-    }
     for (name <- Seq("tokens", "bands"))
       assert(component(streamStore, name) === component(batchStore, name))
     assert(component(streamStore, "tokens").nonEmpty)
@@ -168,6 +192,7 @@ class StreamingIndexAppendSpec extends SparkSpec {
     val s2 = corpus.filter(col("doc_id") % 3 === 2)
 
     NearDup.writeSignatureStore(s0, streamStore)
+    releaseAll()
     def drain(): Unit = StreamingEtl.runDedupGate(
       spark.readStream.schema(corpus.schema)
         .option("maxFilesPerTrigger", 1).json(in.toString),
@@ -177,27 +202,12 @@ class StreamingIndexAppendSpec extends SparkSpec {
     writeFile(in, "night2.json", s2.toJSON.collect().mkString("\n"))
     drain() // RESTART on the same checkpoint: only night2 is a new batch
 
+    assertReleased("after the gated batches")
+
     // reference: the same admission fold through the batch APIs
     NearDup.writeSignatureStore(s0, batchStore)
-    val refDecisions = Seq(s1, s2).map { s =>
-      val storeDups = NearDup.incrementalNearDupPairsFromStore(batchStore, s)
-        .select(col("doc_id"), col("dup_of"))
-      val withinDups = NearDup.lshNearDupPairs(s, sliceMax = None)
-        .select(col("doc_b").as("doc_id"), col("doc_a").as("dup_of"))
-      val losers = storeDups.unionByName(withinDups)
-        .select("doc_id").distinct()
-      val keepers = s.join(losers, Seq("doc_id"), "left_anti")
-      val dec = storeDups.unionByName(withinDups)
-        .collect().map(_.toSeq).toSet
-      NearDup.appendSignatureStore(keepers, batchStore)
-      dec
-    }
+    val refDecisions = Seq(s1, s2).map(foldBatch(batchStore, _))
 
-    def component(dir: String, name: String): Set[Seq[Any]] = {
-      val sn = StoreManifest.currentSnapshot(spark, dir).get
-      StoreManifest.readComponent(spark, dir, sn, name)
-        .map(_.collect().map(_.toSeq).toSet).getOrElse(Set.empty)
-    }
     for (name <- Seq("tokens", "bands"))
       assert(component(streamStore, name) === component(batchStore, name),
         s"gated store component $name diverged from the batch fold")
@@ -218,6 +228,7 @@ class StreamingIndexAppendSpec extends SparkSpec {
     val decBefore = spark.read.parquet(s"$decisions/batch=0")
       .collect().map(_.toSeq).toSet
     val ckpt2 = tmpDir("gate-ckpt2")
+    releaseAll() // the reference fold's caller-owned frames
     StreamingEtl.runDedupGate(
       spark.readStream.schema(corpus.schema)
         .option("maxFilesPerTrigger", 1).json(in.toString),
@@ -227,6 +238,44 @@ class StreamingIndexAppendSpec extends SparkSpec {
     assert(spark.read.parquet(s"$decisions/batch=0")
       .collect().map(_.toSeq).toSet === decBefore,
       "replayed batches must not rewrite decisions")
+    assertReleased("after the replayed batches")
+  }
+
+  test("dedup gate: a tombstoned store doc is never named; store == the batch fold") {
+    import spark.implicits._
+    // disjoint 20-token vocabularies; a near-dup swaps one token (J = 19/21)
+    def text(v: Int, swapped: Boolean = false): String =
+      ((if (swapped) Seq(s"x$v") else Seq(s"v${v}_0")) ++
+        (1 until 20).map(i => s"v${v}_$i")).mkString(" ")
+    val base = (1 to 6).map(v => (v.toLong, text(v))).toDF("doc_id", "text")
+    val batch = Seq((101L, text(2, swapped = true)), (102L, text(3, swapped = true)),
+      (103L, text(7)), (104L, text(7, swapped = true))).toDF("doc_id", "text")
+    val gated = tmpDir("gate-tomb-store").toString
+    val folded = tmpDir("gate-tomb-fold").toString
+    for (store <- Seq(gated, folded)) {
+      NearDup.writeSignatureStore(base, store)
+      NearDup.deleteFromSignatureStore(Seq(2L).toDF("doc_id"), store)
+    }
+    // non-vacuous: before the tombstone, batch doc 101 duplicates doc 2
+    assert(NearDup.incrementalNearDupPairsFromStore(gated, batch, asOfVersion = Some(1L))
+      .collect().exists(r => r.getLong(0) == 101L && r.getLong(1) == 2L))
+
+    val in = tmpDir("gate-tomb-in")
+    val decisions = tmpDir("gate-tomb-dec").toString
+    writeFile(in, "night1.json", batch.toJSON.collect().mkString("\n"))
+    releaseAll()
+    StreamingEtl.runDedupGate(
+      spark.readStream.schema("doc_id LONG, text STRING").json(in.toString),
+      tmpDir("gate-tomb-ckpt").toString, gated, decisions)
+    assertReleased("after the gated batch")
+
+    val got = spark.read.parquet(s"$decisions/batch=0")
+      .select("doc_id", "dup_of").collect().map(_.toSeq).toSet
+    assert(got === foldBatch(folded, batch))
+    assert(got === Set(Seq(102L, 3L), Seq(104L, 103L)), s"decisions: $got")
+    for (name <- Seq("tokens", "bands"))
+      assert(component(gated, name) === component(folded, name),
+        s"gated store component $name diverged from the batch fold")
   }
 
   test("dedup gate: a batch that fails on a broken store releases every cache it took") {
