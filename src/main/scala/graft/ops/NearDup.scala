@@ -168,15 +168,9 @@ object NearDup {
     val keys = Seq("band", "bkey")
     if (sliceMax.isEmpty && hotBandMax.isEmpty)
       Lsh.preflightFullCorpus(bk, keys, pairBudget)
-    val guarded = Lsh.guardHotBuckets(bk, keys, hotBandMax)
-    val lhs = guarded.select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
-    val cand = Lsh.candidateJoin(guarded, lhs, keys, "doc_a", sliceMax)
-      .filter(col("doc_a") < col("doc_id"))
-      .select(col("doc_a"), col("doc_id").as("doc_b"))
-      .distinct()
     // wide only for the full-corpus candidate set — see [[lshNearDupPairs]]
-    verifiedJaccard(cand, tok, "doc_a", "doc_b", threshold,
-      wide = sliceMax.isEmpty)
+    verifiedJaccard(candidatesFromBands(bk, sliceMax, hotBandMax, keys), tok, tok,
+      "doc_a", "doc_b", threshold, wide = sliceMax.isEmpty)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -247,20 +241,22 @@ object NearDup {
     // persisted tok cache, and the r18 close bench measured the extra
     // exchange at 1.2-1.4× net-negative there (q25 0.69×, q78 1.42×
     // pre-gate) — so bounded modes run wide=false, as r17 did.
-    verifiedJaccard(candidatesFromBands(bk, sliceMax, hotBandMax), tok,
+    verifiedJaccard(candidatesFromBands(bk, sliceMax, hotBandMax), tok, tok,
       "doc_a", "doc_b", threshold, wide = sliceMax.isEmpty)
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Attach both token sets to candidate pairs (`leftCol`, `rightCol`),
-    * compute the exact Jaccard at the oracle-pinned 4dp rounding, and
-    * keep pairs ≥ `threshold`. Shared by the full-corpus and incremental
-    * forms so the verify arithmetic can never drift between them (q78's
-    * bit-equality spec depends on it).
+  /** Attach the token sets to candidate pairs (`leftCol` from `leftTok`,
+    * `rightCol` from `rightTok`), compute the exact Jaccard at the
+    * oracle-pinned 4dp rounding, and keep pairs ≥ `threshold`. Shared by
+    * the full-corpus and incremental forms so the verify arithmetic can
+    * never drift between them (q78's bit-equality spec depends on it);
+    * other candidate columns are carried through after `jaccard`.
     */
   private[graft] def verifiedJaccard(
       cand: DataFrame,
-      tok: DataFrame,
+      leftTok: DataFrame,
+      rightTok: DataFrame,
       leftCol: String,
       rightCol: String,
       threshold: Double,
@@ -279,8 +275,8 @@ object NearDup {
        cand.repartition(
          cand.sparkSession.sparkContext.defaultParallelism, col(leftCol))
      else cand)
-      .join(tok.select(col("doc_id").as(leftCol), col("toks").as("ta")), leftCol)
-      .join(tok.select(col("doc_id").as(rightCol), col("toks").as("tb")), rightCol)
+      .join(leftTok.select(col("doc_id").as(leftCol), col("toks").as("ta")), leftCol)
+      .join(rightTok.select(col("doc_id").as(rightCol), col("toks").as("tb")), rightCol)
       .withColumn(
         "jaccard",
         round(
@@ -288,20 +284,22 @@ object NearDup {
             size(array_union(col("ta"), col("tb"))),
           4))
       .filter(col("jaccard") >= threshold)
-      .select(col(leftCol), col(rightCol), col("jaccard"))
+      .select((Seq(leftCol, rightCol, "jaccard") ++
+        cand.columns.filterNot(Set(leftCol, rightCol))).map(col): _*)
 
-  /** Distinct candidate pairs (doc_a < doc_b) sharing ≥ 1 band bucket —
-    * the join whose physical shape FullCorpusSpec pins down: broadcast of
-    * the bounded slice when `sliceMax` is set, a hinted shuffle
-    * sort-merge self-equi-join on the band keys when it is not.
+  /** Distinct candidate pairs (doc_a < doc_b) sharing ≥ 1 band bucket
+    * `keys` — the join whose physical shape FullCorpusSpec pins down:
+    * broadcast of the bounded slice when `sliceMax` is set, a hinted
+    * shuffle sort-merge self-equi-join on the band keys when it is not.
     */
   private[graft] def candidatesFromBands(
       bk: DataFrame,
       sliceMax: Option[Long],
-      hotBandMax: Option[Long]): DataFrame = {
-    val guarded = Lsh.guardHotBuckets(bk, BandKeys, hotBandMax)
-    val lhs = guarded.select(col("doc_id").as("doc_a"), col("band"), col("k1"), col("k2"))
-    Lsh.candidateJoin(guarded, lhs, BandKeys, "doc_a", sliceMax)
+      hotBandMax: Option[Long],
+      keys: Seq[String] = BandKeys): DataFrame = {
+    val guarded = Lsh.guardHotBuckets(bk, keys, hotBandMax)
+    val lhs = guarded.select(col("doc_id").as("doc_a") +: keys.map(col): _*)
+    Lsh.candidateJoin(guarded, lhs, keys, "doc_a", sliceMax)
       .filter(col("doc_a") < col("doc_id"))
       .select(col("doc_a"), col("doc_id").as("doc_b"))
       .distinct()
@@ -340,15 +338,12 @@ object NearDup {
       threshold: Double = 0.5): DataFrame = {
     val tok = tokens(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bk = bands(signatures(tok)).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deltaBk = bk.filter(col("doc_id") % deltaMod === 0)
-      .select(col("doc_id").as("new_id"), col("band"), col("k1"), col("k2"))
-    val baseBk = bk.filter(col("doc_id") % deltaMod =!= 0)
-    val cand = baseBk
+    val deltaBk = bk.filter(col("doc_id") % deltaMod === 0).withColumnRenamed("doc_id", "new_id")
+    val cand = bk.filter(col("doc_id") % deltaMod =!= 0)
       .join(broadcast(deltaBk), BandKeys)
-      .select(col("new_id"), col("doc_id").as("base_id"))
+      .select(col("new_id").as("doc_id"), col("doc_id").as("dup_of"))
       .distinct()
-    verifiedJaccard(cand, tok, "new_id", "base_id", threshold, wide = false)
-      .select(col("new_id").as("doc_id"), col("base_id").as("dup_of"), col("jaccard"))
+    verifiedJaccard(cand, tok, tok, "doc_id", "dup_of", threshold, wide = false)
       .orderBy("doc_id", "dup_of")
   }
 
@@ -642,8 +637,8 @@ object NearDup {
     * contract and verify arithmetic as the in-memory form (parity
     * spec-pinned bit-for-bit); `delta` must carry doc_ids disjoint from
     * the stored corpus (the ingest contract a ledgered pipeline already
-    * guarantees). Sign, then [[probeSignatureStore]] — the streaming
-    * dedup gate runs the same probe on the batch it signed once.
+    * guarantees). Sign, then [[probeSignatureStore]] without its batch
+    * side: the dedup gate's probe, so the two share their arithmetic.
     *
     * Cache lifetime is CALLER-OWNED for the delta token frame (consumed
     * by both the signature pass and the Jaccard verify of the returned
@@ -661,39 +656,43 @@ object NearDup {
       .getOrElse(sys.error(s"signature store $storePath does not exist"))
     val deltaTok = tokens(delta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    probeSignatureStore(storePath, snap, deltaTok, bands(signatures(deltaTok)), threshold)
-      .orderBy("doc_id", "dup_of")
+    probeSignatureStore(storePath, snap, deltaTok, bands(signatures(deltaTok)), threshold,
+      withinBatch = false).drop("origin").orderBy("doc_id", "dup_of")
   }
 
   /** Probe snapshot `snap` of a signature store with a signed batch —
-    * `tok` from [[tokens]], `bk` from [[bands]]: `bk` is broadcast
-    * against the stored bands, and each candidate is verified with
-    * exact Jaccard against the stored tokens ∪ `tok`. Tombstoned docs
-    * are anti-joined out of both stored frames. Output
-    * (doc_id, dup_of, jaccard), unordered.
+    * `tok` from [[tokens]], `bk` from [[bands]] — in one candidate join
+    * and one verify: `bk` is broadcast against the stored bands (origin
+    * "store") and, when `withinBatch`, against itself (origin "batch",
+    * kept only where the other doc's id is the smaller). The batch doc's
+    * tokens come from `tok`, the other doc's from the stored tokens
+    * (∪ `tok` when `withinBatch`). Tombstoned docs are anti-joined out of
+    * both stored frames. Output (doc_id, dup_of, jaccard, origin),
+    * doc_id the batch doc, unordered.
     */
   private[graft] def probeSignatureStore(
       storePath: String,
       snap: StoreManifest.Snapshot,
       tok: DataFrame,
       bk: DataFrame,
-      threshold: Double): DataFrame = {
+      threshold: Double,
+      withinBatch: Boolean): DataFrame = {
     val spark = tok.sparkSession
     def live(df: DataFrame): DataFrame =
       storeComponent(spark, storePath, snap, "tombstones").fold(df)(t =>
         df.join(broadcast(t.select("doc_id")), Seq("doc_id"), "left_anti"))
-    val baseTok = live(storeComponent(spark, storePath, snap, "tokens").get)
-    val baseBk = live(storeComponent(spark, storePath, snap, "bands").get)
-    val deltaBk = bk.select(col("doc_id").as("new_id"), col("band"), col("k1"), col("k2"))
-    val cand = baseBk
-      .join(broadcast(deltaBk), BandKeys)
-      .select(col("new_id"), col("doc_id").as("base_id"))
+    val storeTok = live(storeComponent(spark, storePath, snap, "tokens").get)
+    val storeBk = live(storeComponent(spark, storePath, snap, "bands").get)
+      .withColumn("origin", lit("store"))
+    val otherTok = if (withinBatch) storeTok.unionByName(tok) else storeTok
+    val otherBk =
+      if (withinBatch) storeBk.unionByName(bk.withColumn("origin", lit("batch"))) else storeBk
+    val cand = otherBk
+      .join(broadcast(bk.withColumnRenamed("doc_id", "new_id")), BandKeys)
+      .filter(col("origin") === "store" || col("doc_id") < col("new_id"))
+      .select(col("new_id").as("doc_id"), col("doc_id").as("dup_of"), col("origin"))
       .distinct()
-    // doc_ids are disjoint, so one unioned token frame serves both
-    // verify attaches — the exact arithmetic stays verifiedJaccard's
-    verifiedJaccard(cand, baseTok.unionByName(tok),
-      "new_id", "base_id", threshold, wide = false)
-      .select(col("new_id").as("doc_id"), col("base_id").as("dup_of"), col("jaccard"))
+    verifiedJaccard(cand, tok, otherTok, "doc_id", "dup_of", threshold, wide = false)
   }
 
   /** Full-corpus duplicate clusters at LINEAR candidate cost — the shape a

@@ -1513,15 +1513,19 @@ object StreamingEtl {
   /** Streaming near-dup ADMISSION GATE over the persisted signature
     * store — the nightly-crawl loop composed end-to-end. Per micro-batch:
     *
-    *   1. sign the batch once: its token frame and band-key frame are
-    *      persisted, and every later step reads those two frames;
-    *   2. preflight the within-batch candidate space
-    *      ([[graft.ops.Lsh.preflightFullCorpus]], default pair budget) —
-    *      the action that fills both caches;
-    *   3. probe the CURRENT store for near-dups of the batch's docs
-    *      (store side = everything admitted by earlier batches — base
-    *      corpus plus every prior night's keepers), and pair the batch
-    *      with itself (full batch, no slice);
+    *   1. sign the batch once: the batch, its token frame and its
+    *      band-key frame are persisted, and every later step reads them;
+    *   2. bound the within-batch pairs: one job fills the batch cache and
+    *      counts its n rows. A row has one key per band, so the batch
+    *      pairs number at most Bands · C(n, 2), exactly that when all n
+    *      rows share one signature. Only a bound over the default pair
+    *      budget (n ≥ 1,769) runs the exact preflight
+    *      ([[graft.ops.Lsh.preflightFullCorpus]]), which fails the batch
+    *      over budget. Store-probe candidates are unbudgeted;
+    *   3. probe the CURRENT store (everything admitted by earlier
+    *      batches — base corpus plus every prior night's keepers) and the
+    *      batch itself for near-dups of the batch's docs, in one join and
+    *      one verify ([[graft.ops.NearDup.probeSignatureStore]]);
     *   4. decide: a doc that pairs with a stored doc, or with another
     *      batch doc and is not that pair's minimum, is rejected — the
     *      conservative pairwise min-keeper (a dup of a dropped doc is
@@ -1570,20 +1574,17 @@ object StreamingEtl {
         val cached = Seq(batch, tok, bk)
         cached.foreach(_.persist(level))
         try {
-          Lsh.preflightFullCorpus(bk, NearDup.BandKeys, Some(Lsh.DefaultPairBudget))
-          val storeDups = NearDup.probeSignatureStore(storePath, cur, tok, bk, threshold)
-            .select(col("doc_id"), col("dup_of"), col("jaccard"), lit("store").as("origin"))
-          // batch-sized candidates verify map-side against the tok cache
-          // (the bounded-mode reason lshNearDupPairs gives for wide = false)
-          val withinDups = NearDup.verifiedJaccard(
-            NearDup.candidatesFromBands(bk, None, None), tok, "doc_a", "doc_b",
-            threshold, wide = false)
-            .select(col("doc_b").as("doc_id"), col("doc_a").as("dup_of"),
-              col("jaccard"), lit("batch").as("origin"))
-          val decisions = storeDups.unionByName(withinDups).persist(level)
+          // an accumulator, not count(): one job, no shuffle (takeCensus)
+          val rows = spark.sparkContext.longAccumulator("dedup gate batch rows")
+          batch.foreachPartition((it: Iterator[Row]) => rows.add(it.foldLeft(0L)((c, _) => c + 1)))
+          val n = rows.sum.toDouble
+          if (NearDup.Bands * n * (n - 1) / 2 > Lsh.DefaultPairBudget)
+            Lsh.preflightFullCorpus(bk, NearDup.BandKeys, Some(Lsh.DefaultPairBudget))
+          val decisions = NearDup.probeSignatureStore(
+            storePath, cur, tok, bk, threshold, withinBatch = true).persist(level)
           try {
-            // the action that fills the decisions cache; at most one id
-            // per batch doc
+            // the action that fills the decisions cache (and the tok and
+            // bk caches under it); at most one id per batch doc
             val rejected = decisions.select("doc_id").distinct()
               .collect().map(_.get(0))
             // overwrite per batch partition: a replayed crash window

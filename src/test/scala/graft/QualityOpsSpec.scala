@@ -190,6 +190,37 @@ class QualityOpsSpec extends SparkSpec {
     assert(nullText.getAs[Int]("keep") === 0)
   }
 
+  test("compressionRatio: ratio, n_bytes and keep equal a driver-side Deflater recompute") {
+    val rnd = new scala.util.Random(81)
+    // 150k printable chars deflate to more than the operator's 64 KiB buffer
+    val noise = Iterator.continually(rnd.nextPrintableChar()).take(150000).mkString
+    val texts: Seq[String] = Seq("", null, "a", "naïve café — ünïcödé ✓", noise,
+      ("buy now " * 500).trim) ++
+      (1 to 14).map(i => (1 to i * 7).map(j => s"w${(i * j) % 23}").mkString(" "))
+    def expected(text: String): (Long, Double, Int) = {
+      val bytes = Option(text).fold(Array.emptyByteArray)(
+        _.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val d = new java.util.zip.Deflater(6, /* nowrap = */ true)
+      d.setInput(bytes)
+      d.finish()
+      val buf = new Array[Byte](4096)
+      var n = 0L
+      while (!d.finished()) n += d.deflate(buf)
+      d.end()
+      val ratio = BigDecimal(n.toDouble / math.max(bytes.length, 1).toDouble)
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      (bytes.length.toLong, ratio, if (ratio >= 0.1 && bytes.length > 0) 1 else 0)
+    }
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val got = QualityOps.compressionRatio(docs).collect().map { r =>
+      r.getAs[Long]("doc_id") ->
+        ((r.getAs[Long]("n_bytes"), r.getAs[Double]("ratio"), r.getAs[Int]("keep")))
+    }.toMap
+    val want = texts.zipWithIndex.map { case (t, i) => i.toLong -> expected(t) }.toMap
+    assert(got === want)
+    assert(want.values.map(_._3).toSet === Set(0, 1), "keep never varies: vacuous")
+  }
+
   test("compressionRatio plan: map-side only, no shuffle before the output sort") {
     val docs = Queries.t(spark, "/root/testdata/sf0.001", "documents")
     val df = QualityOps.compressionRatio(docs)

@@ -28,21 +28,35 @@ class StreamingIndexAppendSpec extends SparkSpec {
 
   /** The dedup gate's admission step through the batch APIs: probe the
     * store, pair the batch with itself, append the keepers. Returns the
-    * (doc_id, dup_of) decisions.
+    * (doc_id, dup_of, jaccard, origin) decisions.
     */
   private def foldBatch(store: String, s: org.apache.spark.sql.DataFrame): Set[Seq[Any]] = {
     val storeDups = NearDup.incrementalNearDupPairsFromStore(store, s)
-      .select(col("doc_id"), col("dup_of"))
+      .withColumn("origin", lit("store"))
     val withinDups = NearDup.lshNearDupPairs(s, sliceMax = None)
-      .select(col("doc_b").as("doc_id"), col("doc_a").as("dup_of"))
-    val losers = storeDups.unionByName(withinDups)
-      .select("doc_id").distinct()
-    val keepers = s.join(losers, Seq("doc_id"), "left_anti")
-    val dec = storeDups.unionByName(withinDups)
-      .collect().map(_.toSeq).toSet
+      .select(col("doc_b").as("doc_id"), col("doc_a").as("dup_of"), col("jaccard"),
+        lit("batch").as("origin"))
+    val dups = storeDups.unionByName(withinDups)
+    val keepers = s.join(dups.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
+    val dec = dups.collect().map(_.toSeq).toSet
     NearDup.appendSignatureStore(keepers, store)
     dec
   }
+
+  /** The decisions the gate wrote for batch `b`. */
+  private def decided(decisions: String, b: Int): Set[Seq[Any]] =
+    spark.read.parquet(s"$decisions/batch=$b")
+      .select("doc_id", "dup_of", "jaccard", "origin").collect().map(_.toSeq).toSet
+
+  /** 20 tokens from vocabulary `v`; a swapped near-dup differs in one (J = 19/21). */
+  private def text(v: Int, swapped: Boolean = false): String =
+    ((if (swapped) Seq(s"x$v") else Seq(s"v${v}_0")) ++
+      (1 until 20).map(i => s"v${v}_$i")).mkString(" ")
+
+  private def gateOnce(in: java.nio.file.Path, store: String, decisions: String): Unit =
+    StreamingEtl.runDedupGate(
+      spark.readStream.schema("doc_id LONG, text STRING").json(in.toString),
+      tmpDir("gate-ckpt").toString, store, decisions)
 
   private def releaseAll(): Unit = {
     spark.catalog.clearCache()
@@ -213,11 +227,8 @@ class StreamingIndexAppendSpec extends SparkSpec {
         s"gated store component $name diverged from the batch fold")
 
     // decisions match the reference fold per batch, and are non-vacuous
-    for ((want, b) <- refDecisions.zipWithIndex) {
-      val got = spark.read.parquet(s"$decisions/batch=$b")
-        .select("doc_id", "dup_of").collect().map(_.toSeq).toSet
-      assert(got === want, s"batch $b decisions diverged")
-    }
+    for ((want, b) <- refDecisions.zipWithIndex)
+      assert(decided(decisions, b) === want, s"batch $b decisions diverged")
     assert(refDecisions.exists(_.nonEmpty),
       "fixture vacuous: the gate never rejected a doc")
 
@@ -243,13 +254,15 @@ class StreamingIndexAppendSpec extends SparkSpec {
 
   test("dedup gate: a tombstoned store doc is never named; store == the batch fold") {
     import spark.implicits._
-    // disjoint 20-token vocabularies; a near-dup swaps one token (J = 19/21)
-    def text(v: Int, swapped: Boolean = false): String =
-      ((if (swapped) Seq(s"x$v") else Seq(s"v${v}_0")) ++
-        (1 until 20).map(i => s"v${v}_$i")).mkString(" ")
     val base = (1 to 6).map(v => (v.toLong, text(v))).toDF("doc_id", "text")
-    val batch = Seq((101L, text(2, swapped = true)), (102L, text(3, swapped = true)),
-      (103L, text(7)), (104L, text(7, swapped = true))).toDF("doc_id", "text")
+    // edge rows: two null doc_ids (a near-dup of stored doc 5 and an exact
+    // copy of batch doc 103) are kept and appended, never named; an empty
+    // text and a null text are kept
+    val batch = Seq[(Option[Long], String)](
+      (Some(101L), text(2, swapped = true)), (Some(102L), text(3, swapped = true)),
+      (Some(103L), text(7)), (Some(104L), text(7, swapped = true)),
+      (None, text(5, swapped = true)), (None, text(7)),
+      (Some(105L), ""), (Some(106L), null)).toDF("doc_id", "text")
     val gated = tmpDir("gate-tomb-store").toString
     val folded = tmpDir("gate-tomb-fold").toString
     for (store <- Seq(gated, folded)) {
@@ -264,15 +277,66 @@ class StreamingIndexAppendSpec extends SparkSpec {
     val decisions = tmpDir("gate-tomb-dec").toString
     writeFile(in, "night1.json", batch.toJSON.collect().mkString("\n"))
     releaseAll()
-    StreamingEtl.runDedupGate(
-      spark.readStream.schema("doc_id LONG, text STRING").json(in.toString),
-      tmpDir("gate-tomb-ckpt").toString, gated, decisions)
+    gateOnce(in, gated, decisions)
     assertReleased("after the gated batch")
 
-    val got = spark.read.parquet(s"$decisions/batch=0")
-      .select("doc_id", "dup_of").collect().map(_.toSeq).toSet
+    val got = decided(decisions, 0)
     assert(got === foldBatch(folded, batch))
-    assert(got === Set(Seq(102L, 3L), Seq(104L, 103L)), s"decisions: $got")
+    assert(got.map(r => Seq(r(0), r(1), r(3))) ===
+      Set(Seq(102L, 3L, "store"), Seq(104L, 103L, "batch")), s"decisions: $got")
+    for (name <- Seq("tokens", "bands"))
+      assert(component(gated, name) === component(folded, name),
+        s"gated store component $name diverged from the batch fold")
+    val stored = component(gated, "tokens").toSeq.map(_.head)
+    assert(stored.count(_ == null) === 2 && Set(105L, 106L).forall(stored.contains),
+      s"edge rows not appended: $stored")
+  }
+
+  test("dedup gate: a batch over the pair budget fails in the preflight and releases its caches") {
+    import spark.implicits._
+    val store = tmpDir("gate-budget-store").toString
+    NearDup.writeSignatureStore(Seq((1L, text(1))).toDF("doc_id", "text"), store)
+    // 1,800 identical docs: every band is one bucket of 1,800, so the
+    // preflight's exact estimate is 32 · C(1800, 2) = 51,811,200 raw pairs
+    val in = tmpDir("gate-budget-in")
+    writeFile(in, "night1.json", (1 to 1800)
+      .map(i => s"""{"doc_id":${1000 + i},"text":"${text(2)}"}""").mkString("\n"))
+    releaseAll()
+    val e = intercept[Exception](gateOnce(in, store, tmpDir("gate-budget-dec").toString))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(messages.exists(_.contains(
+      "unguarded full-corpus candidate join would enumerate 51811200 raw pairs")),
+      s"gate failed for another reason: $e")
+    assertReleased("after the failed batch")
+    assert(StoreManifest.currentSnapshot(spark, store).get.version === 1L)
+  }
+
+  test("dedup gate: a batch whose pair bound exceeds the budget but whose pairs do not is gated normally") {
+    import spark.implicits._
+    val base = (1 to 3).map(v => (v.toLong, text(v))).toDF("doc_id", "text")
+    // 1,800 docs: the bound 32 · C(1800, 2) is over budget, so the exact
+    // preflight runs, and passes. Planted: 2797 ~ stored 1, 2798 ~ 1001,
+    // 2799 ~ 1002, 2800 == 1002
+    val planted = Map(1797 -> text(1, swapped = true), 1798 -> text(101, swapped = true),
+      1799 -> text(102, swapped = true), 1800 -> text(102))
+    val batch = (1 to 1800).map(i => (1000L + i, planted.getOrElse(i, text(100 + i))))
+      .toDF("doc_id", "text")
+    val gated = tmpDir("gate-bound-store").toString
+    val folded = tmpDir("gate-bound-fold").toString
+    for (store <- Seq(gated, folded)) NearDup.writeSignatureStore(base, store)
+    val in = tmpDir("gate-bound-in")
+    val decisions = tmpDir("gate-bound-dec").toString
+    writeFile(in, "night1.json", batch.toJSON.collect().mkString("\n"))
+    releaseAll()
+    gateOnce(in, gated, decisions)
+    assertReleased("after the gated batch")
+
+    val got = decided(decisions, 0)
+    assert(got === foldBatch(folded, batch))
+    assert(got.map(r => Seq(r(0), r(1), r(3))) === Set(Seq(2797L, 1L, "store"),
+      Seq(2798L, 1001L, "batch"), Seq(2799L, 1002L, "batch"), Seq(2800L, 1002L, "batch"),
+      Seq(2800L, 2799L, "batch")), s"decisions: $got")
     for (name <- Seq("tokens", "bands"))
       assert(component(gated, name) === component(folded, name),
         s"gated store component $name diverged from the batch fold")
