@@ -168,9 +168,10 @@ object AnnLsh {
     val bk = buckets(vecs, dim)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // safe-by-default (the q151 lesson — see Lsh.preflightFullCorpus);
-    // bk is persisted, so the preflight's scan is reused by the join
+    // bk is persisted, so the preflight's scan is reused by the join; a
+    // failed preflight releases both caches
     if (sliceMax.isEmpty && hotBucketMax.isEmpty)
-      Lsh.preflightFullCorpus(bk, Seq("l", "bucket"), pairBudget)
+      Lsh.preflightFullCorpus(bk, Seq("l", "bucket"), pairBudget, vecs, bk)
     val cand = candidatesFromBuckets(bk, "vec_a", strict = true, sliceMax, hotBucketMax)
       .withColumnRenamed("vec_id", "vec_b")
     cand

@@ -453,28 +453,13 @@ object Behavior {
           order :+ asc("user_id"), out).select(col("user_id"), col(out))
       // The three tile passes are INDEPENDENT multi-action pipelines
       // (each Ranks.withNtile runs a range-sample + checkpoint + counts
-      // collect over the cached per-user snapshot), so build them from a
-      // small thread pool (guide §2.6 — overlap independent jobs): each
-      // leg's jobs back-fill executors freed by another leg's tail
-      // instead of serializing three driver-paced job chains. Safe
-      // because `per` is already materialized by the max-ts collect
-      // above, so the legs race on nothing.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      val (rT, fT, mT) =
-        try {
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          val r = scala.concurrent.Future(
-            tile("recency_days", Seq(asc("recency_days")), "r_score"))
-          val f = scala.concurrent.Future(
-            tile("frequency", Seq(desc("frequency")), "f_score"))
-          val m = scala.concurrent.Future(
-            tile("monetary", Seq(desc("monetary")), "m_score"))
-          import scala.concurrent.duration.Duration
-          (scala.concurrent.Await.result(r, Duration.Inf),
-            scala.concurrent.Await.result(f, Duration.Inf),
-            scala.concurrent.Await.result(m, Duration.Inf))
-        } finally pool.shutdown()
+      // collect over the cached per-user snapshot), so they build as
+      // concurrent [[Legs]]. Safe because `per` is already materialized
+      // by the max-ts collect above, so the legs race on nothing.
+      val Seq(rT, fT, mT) = Legs.run(per.sparkSession.sparkContext)(
+        () => tile("recency_days", Seq(asc("recency_days")), "r_score"),
+        () => tile("frequency", Seq(desc("frequency")), "f_score"),
+        () => tile("monetary", Seq(desc("monetary")), "m_score"))
       baseOf(perUser)
         .join(rT, "user_id")
         .join(fT, "user_id")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph centrality on DataFrames — the "importance" signal
@@ -10,38 +10,49 @@ import org.apache.spark.sql.functions._
   * (the public CommonCrawl ranking methodology). The engine's graph
   * surface so far is connected components ([[Clusters]]); this adds the
   * fixed-point ITERATIVE shape: rank_{t+1} = f(Σ over in-edges of
-  * rank_t / out-degree).
+  * rank_t · w / w_total(src)).
+  *
+  * One core, three entry points: [[pageRank]] (q102),
+  * [[personalizedPageRank]] (q129) and [[weightedPageRank]] (q133) each
+  * build a (cu, su, w) pair frame over the customer–supplier trade graph
+  * and hand it to the private `rank` core — distinct pairs at w = 1 for
+  * the first two, per-pair order-line counts for the third; q129 also
+  * passes its seed modulus, which swaps the uniform teleport vector for
+  * the seed-concentrated one. Every fix to the build, gate or iteration
+  * lands in that one body.
   *
   * Determinism discipline (the q90/q96 exact-integer rule): ranks live
-  * in fixed-point longs (scale 1e12); each step is integer division by
-  * degree, an exact long sum, and integer damping ((85·x) div 100) —
-  * commutative, associative, partition-order-free, so Spark and the
-  * DuckDB oracle replay every iteration bit-for-bit. No doubles
-  * anywhere: float PageRank sums differ across partitionings and
-  * engines in the last ulp, which a hash-compare cannot tolerate.
+  * in fixed-point longs (scale 1e12); each step is an exact long product
+  * (r · w) then integer division by w_total, an exact long sum, and
+  * integer damping ((85·x) div 100) — commutative, associative,
+  * partition-order-free, so Spark and the DuckDB oracles replay every
+  * iteration bit-for-bit. No doubles anywhere: float PageRank sums differ
+  * across partitionings and engines in the last ulp, which a hash-compare
+  * cannot tolerate. At w = 1, w_total is the degree and (r·1) div deg is
+  * the unweighted share exactly.
   *
   * Shape, scale-first: one iteration = join(edges, ranks on src) +
   * groupBy(dst).sum — the standard Pregel-on-DataFrames step. Vertices
   * are LONGS (custkey·2 / suppkey·2+1; the label string exists only in
   * the final top-k projection) — an id shuffle is bytes-cheaper and
   * hash-faster than strings by ~5× measured here. Edges are built once
-  * and persisted (reused every iteration; lifetime caller-owned, the
-  * [[NearDup]] store discipline), as is the degree/teleport base frame.
-  * With `broadcastRanks=true` (default) the per-iteration rank state —
-  * |V| rows of 2 longs — is broadcast, so the |E|-sized edge frame
-  * NEVER shuffles: each iteration is one map-side join + one map-side-
-  * combined aggregate of ≤|V| rows per partition. That is the right
-  * plan whenever |V| ≪ |E| (host graphs: millions of hosts, billions
-  * of links). At |V| beyond broadcast (billions of vertices), pass
-  * `broadcastRanks=false` for the shuffle-join twin — same arithmetic,
-  * bit-equal output (GraphSpec pins it), edges pre-partitioned on src
-  * so AQE handles hub skew. Iterations are unrolled into ONE lineage
-  * (fixed count, no driver-side convergence loop reading results back).
+  * and persisted (reused every iteration), as is the w_total/teleport
+  * base frame. With `broadcastRanks=true` (default) the per-iteration
+  * rank state — |V| rows of 3 longs — is broadcast, so the |E|-sized
+  * edge frame NEVER shuffles: each iteration is one map-side join + one
+  * map-side-combined aggregate of ≤|V| rows per partition. That is the
+  * right plan whenever |V| ≪ |E| (host graphs: millions of hosts,
+  * billions of links). At |V| beyond broadcast (billions of vertices),
+  * pass `broadcastRanks=false` for the shuffle-join twin — same
+  * arithmetic, bit-equal output (GraphSpec pins it), edges
+  * pre-partitioned on src so AQE handles hub skew. Iterations are
+  * unrolled into ONE lineage (fixed count, no driver-side convergence
+  * loop reading results back).
   *
-  * Two caller-facing caveats (r18 ADVICE): the pagerank builders are
-  * EAGER — the |V| gate is a bounded 1-value `deg.count()` during
-  * DataFrame construction, so |V| is frozen at build time (the returned
-  * frame is not a lazy view of mutable inputs); and the edges/deg/init
+  * Two caller-facing caveats: the builders are EAGER — |V|, |E| and
+  * |seeds| come from one bounded 1-row collect during DataFrame
+  * construction, so they are frozen at build time (the returned frame is
+  * not a lazy view of mutable inputs); and the pairs/w_total/edges/init
   * persists have CALLER-OWNED lifetime (the [[NearDup]] discipline) — a
   * long-lived session clears them via `spark.catalog.clearCache()` when
   * done with the result.
@@ -85,84 +96,17 @@ object Graph {
     * vertex set is the set of edge endpoints (an isolated customer has
     * no rank mass to receive or give). Initial rank = Scale div N for
     * every vertex; base = ((Scale div N) · 15) div 100 is the teleport
-    * term.
+    * term. The private `rank` core over distinct pairs at unit weight: w = 1
+    * makes w_total the degree and (r·1) div deg the plain share.
     */
   def pageRank(
       orders: DataFrame,
       lineitem: DataFrame,
       iters: Int = 3,
       topK: Int = 50,
-      broadcastRanks: Boolean = true): DataFrame = {
-    require(iters >= 1 && topK >= 1)
-    val pairs = orders.select(col("o_orderkey"), col("o_custkey"))
-      .join(lineitem.select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(
-        (col("o_custkey") * 2).as("cu"),
-        (col("l_suppkey") * 2 + 1).as("su"))
-      .distinct()
-    // undirected: both directions via one explode over the distinct pair
-    // set (r19) — the former union of two selects was two SEPARATE
-    // subtrees, each recomputing the orders⋈lineitem join + distinct to
-    // build the cache (Spark shares no common subexpressions across a
-    // union), and the cached frame carried both branches' partitions.
-    // pairs persisted so the degree pass and the edge-cache build read
-    // ONE join+distinct; all persists caller-owned (the signature-store
-    // discipline).
-    val pairsP = pairs.persist()
-    val edges0 = pairsP
-      .select(explode(array(
-        struct(col("cu").as("src"), col("su").as("dst")),
-        struct(col("su").as("src"), col("cu").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    // the broadcast hint is a no-op plan-wise when the other side is
-    // already broadcast; applied to the RANK side only, never edges
-    def small(df: DataFrame): DataFrame =
-      if (broadcastRanks) broadcast(df) else df
-    // pairs are distinct, so per-src edge count IS the degree
-    val deg = edges0.groupBy(col("src")).agg(count(lit(1)).as("deg")).persist()
-    // |V| and |E| as collected literals (the q129 gate discipline — a
-    // bounded 1-row action, not driver data work): the former 1-row
-    // broadcast crossJoin recomputed deg inside its own broadcast
-    // subquery, racing init's materialization into DUPLICATE edge-build
-    // scans (r18 profile: two concurrent 64-task full-input stages at
-    // query start). |E| = sum(deg) rides the same aggregate for free and
-    // sizes the cached edge layout below.
-    val gate = deg
-      .agg(count(lit(1)).as("n"), coalesce(sum("deg"), lit(0L)).as("m"))
-      .collect()(0)
-    val n = math.max(gate.getLong(0), 1L) // empty graph: init has no rows
-    // persisted at the DATA-derived width (see [[edgeWidth]]); at
-    // production |E| this is defaultParallelism and the repartition is a
-    // no-op choice of the same width
-    val w = edgeWidth(orders.sparkSession, gate.getLong(1))
-    val edges =
-      (if (w < orders.sparkSession.sparkContext.defaultParallelism)
-         edges0.repartition(w, col("src"))
-       else edges0).persist()
-    val init = deg.select(col("src").as("v"), col("deg"))
-      .select(col("v"), col("deg"),
-        lit(Scale / n).as("r"),
-        lit(((Scale / n) * 15) / 100).as("base"))
-      .persist() // referenced every iteration (deg + teleport base)
-    var ranks = init
-    for (_ <- 1 to iters) {
-      val contrib = ranks.select(col("v").as("src"), expr("r div deg").as("c"))
-      val inflow = edges.join(small(contrib), "src")
-        .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-      ranks = init.select(col("v"), col("deg"), col("base"))
-        .join(small(inflow), col("v") === col("dst"), "left")
-        .select(col("v"), col("deg"), col("base"),
-          (col("base") + expr("(85 * coalesce(inflow, 0L)) div 100")).as("r"))
-    }
-    ranks.select(
-        concat(
-          when(col("v") % 2 === 0, lit("c")).otherwise(lit("s")),
-          expr("v div 2")).as("vertex"),
-        col("r").as("rank_q"))
-      .orderBy(desc("rank_q"), asc("vertex"))
-      .limit(topK)
-  }
+      broadcastRanks: Boolean = true): DataFrame =
+    rank(tradePairs(orders, lineitem).distinct().withColumn("w", lit(1L)),
+      iters, topK, broadcastRanks, seedMod = None)
 
   /** Personalized PageRank (q129): the q102 iteration with the teleport
     * mass concentrated on a SEED set instead of uniform — the
@@ -174,9 +118,9 @@ object Graph {
     * Seeds: supplier vertices with suppkey ≡ 0 (mod `seedMod`) — a
     * deterministic stand-in for the curated list. init = the
     * personalization vector itself (Scale div |seeds| on seeds, 0
-    * elsewhere); base = 15% of it. Same exact-integer fixed-point,
-    * same broadcast-ranks/shuffle-twin shape, same unrolled lineage —
-    * every iteration replays bit-for-bit in the oracle.
+    * elsewhere); base = 15% of it. Vertices unreachable from the seeds
+    * end at rank 0 and are dropped from the output. A non-empty graph
+    * with no seed fails with `IllegalArgumentException`.
     */
   def personalizedPageRank(
       orders: DataFrame,
@@ -185,74 +129,118 @@ object Graph {
       iters: Int = 3,
       topK: Int = 50,
       broadcastRanks: Boolean = true): DataFrame = {
-    require(iters >= 1 && topK >= 1 && seedMod >= 1)
-    val pairs = orders.select(col("o_orderkey"), col("o_custkey"))
+    require(seedMod >= 1)
+    rank(tradePairs(orders, lineitem).distinct().withColumn("w", lit(1L)),
+      iters, topK, broadcastRanks, Some(seedMod))
+  }
+
+  /** WEIGHTED PageRank (q133): the q102 iteration with edge weights —
+    * an edge's share of its source's outflow is proportional to its
+    * weight instead of uniform. Weight = the number of order LINES
+    * linking the (customer, supplier) pair: a pair that traded 50 times
+    * is a 50× stronger endorsement than a one-off (the public weighted-
+    * PageRank/CommonCrawl-host-ranking construction, where link
+    * multiplicity weighs the edge). Unit weights recover [[pageRank]]
+    * bit-for-bit (GraphSpec).
+    */
+  def weightedPageRank(
+      orders: DataFrame,
+      lineitem: DataFrame,
+      iters: Int = 3,
+      topK: Int = 50,
+      broadcastRanks: Boolean = true): DataFrame =
+    rank(tradePairs(orders, lineitem).groupBy(col("cu"), col("su"))
+        .agg(count(lit(1)).as("w")),
+      iters, topK, broadcastRanks, seedMod = None)
+
+  /** One (cu, su) row per order line: custkey·2 and suppkey·2+1. */
+  private def tradePairs(orders: DataFrame, lineitem: DataFrame): DataFrame =
+    orders.select(col("o_orderkey"), col("o_custkey"))
       .join(lineitem.select(col("l_orderkey"), col("l_suppkey")),
         col("o_orderkey") === col("l_orderkey"))
       .select(
         (col("o_custkey") * 2).as("cu"),
         (col("l_suppkey") * 2 + 1).as("su"))
-      .distinct()
-    // one explode, not a two-branch union; pairs persisted so the degree
-    // pass and the edge-cache build share one join+distinct — see
-    // [[pageRank]] (r19)
+
+  /** The PageRank core every entry point runs: `pairs` is one
+    * (cu, su, w) row per undirected edge with a long weight w ≥ 1;
+    * `seedMod` selects the personalized teleport (seeds = supplier
+    * vertices with suppkey ≡ 0 mod seedMod) over the uniform one.
+    */
+  private def rank(
+      pairs: DataFrame,
+      iters: Int,
+      topK: Int,
+      broadcastRanks: Boolean,
+      seedMod: Option[Int]): DataFrame = {
+    require(iters >= 1 && topK >= 1)
+    val spark = pairs.sparkSession
+    // persisted so the degree pass and the edge-cache build read ONE
+    // join + distinct/aggregate; undirected via one explode over it — a
+    // union of two selects would be two subtrees, each recomputing the
+    // pair build (Spark shares no common subexpressions across a union)
     val pairsP = pairs.persist()
     val edges0 = pairsP
       .select(explode(array(
-        struct(col("cu").as("src"), col("su").as("dst")),
-        struct(col("su").as("src"), col("cu").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+        struct(col("cu").as("src"), col("su").as("dst"), col("w")),
+        struct(col("su").as("src"), col("cu").as("dst"), col("w")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w"))
+    // the broadcast hint is a no-op plan-wise when the other side is
+    // already broadcast; applied to the RANK side only, never edges
     def small(df: DataFrame): DataFrame =
       if (broadcastRanks) broadcast(df) else df
-    // persisted: the gate action below materializes deg once; init then
-    // reads the cache instead of re-aggregating the edges (r18 profile
-    // showed the duplicate 64-task aggregate)
-    val deg = edges0.groupBy(col("src")).agg(count(lit(1)).as("deg")).persist()
+    // persisted: the gate action below materializes it once and init
+    // then reads the cache instead of re-aggregating the edges
+    val deg = edges0.groupBy(col("src").as("v"))
+      .agg(sum(col("w")).as("wtot"), count(lit(1)).as("ecnt")).persist()
     // integer div: Column `/` on longs is DOUBLE division
-    val isSeed = col("v") % 2 === 1 && expr(s"(v div 2) % $seedMod") === 0
-    // ONE collected (nv, ns) aggregate serves BOTH the empty-seed gate
-    // and the personalization denominator (inlined as a literal below —
-    // no crossJoin, no second seed-count aggregate in init's lineage;
-    // the r16 A/B traced q129's r15 elevation to the gate running as an
-    // EXTRA driver action next to the lazy seeds frame it duplicated).
-    // The gate: on a NON-EMPTY graph an empty seed set must fail loudly
-    // here — Spark's `r div 0` yields NULL and silently empties the
-    // result, while the DuckDB oracle raises division-by-zero; fail the
-    // same way on both. An EMPTY graph is fine on both engines
-    // identically (no vertex row reaches the division), so totality on
-    // empty inputs is preserved (EmptyInputSpec).
-    val gate = deg.select(col("src").as("v"), col("deg"))
-      .agg(count(lit(1)).as("nv"), count(when(isSeed, 1)).as("ns"),
-        coalesce(sum("deg"), lit(0L)).as("m"))
+    val isSeed = seedMod.map(k => col("v") % 2 === 1 && expr(s"(v div 2) % $k") === 0)
+    // |V|, |E| and |seeds| as ONE collected 1-row aggregate, inlined as
+    // literals below: a broadcast crossJoin of the same scalars would
+    // recompute deg inside its own subquery, racing init's
+    // materialization into duplicate edge-build scans. |V| is frozen at
+    // build time, so the returned frame is not a lazy view of its inputs.
+    val gate = deg
+      .agg(count(lit(1)), coalesce(sum("ecnt"), lit(0L)) +:
+        isSeed.map(p => count(when(p, 1))).toSeq: _*)
       .collect()(0)
-    require(gate.getLong(0) == 0L || gate.getLong(1) > 0L,
-      s"personalizedPageRank: no supplier vertex satisfies suppkey % $seedMod == 0 — empty seed set")
-    val ns = math.max(gate.getLong(1), 1L) // empty graph: never consumed
-    // cached edges at the DATA-derived width (|E| = sum(deg) rides the
-    // gate aggregate for free) — see [[edgeWidth]]
-    val w = edgeWidth(orders.sparkSession, gate.getLong(2))
+    // on a NON-EMPTY graph an empty seed set fails here: Spark's `r div 0`
+    // yields NULL and silently empties the result, while the DuckDB
+    // oracle raises division-by-zero. An EMPTY graph is fine on both
+    // engines (no vertex row reaches the division).
+    seedMod.foreach(k => require(gate.getLong(0) == 0L || gate.getLong(2) > 0L,
+      s"personalizedPageRank: no supplier vertex satisfies suppkey % $k == 0 — empty seed set"))
+    // teleport share: Scale div N uniformly, or Scale div |seeds| on the
+    // seeds and 0 elsewhere (empty graph: never consumed)
+    val share = Scale / math.max(gate.getLong(if (isSeed.isDefined) 2 else 0), 1L)
+    def teleport(x: Long): Column =
+      isSeed.fold(lit(x))(p => when(p, lit(x)).otherwise(lit(0L)))
+    // persisted at the DATA-derived width (see [[edgeWidth]]); at
+    // production |E| this is defaultParallelism and the repartition is a
+    // no-op choice of the same width
+    val width = edgeWidth(spark, gate.getLong(1))
     val edges =
-      (if (w < orders.sparkSession.sparkContext.defaultParallelism)
-         edges0.repartition(w, col("src"))
+      (if (width < spark.sparkContext.defaultParallelism)
+         edges0.repartition(width, col("src"))
        else edges0).persist()
-    val init = deg.select(col("src").as("v"), col("deg"))
-      .select(col("v"), col("deg"),
-        when(isSeed, lit(Scale / ns)).otherwise(lit(0L)).as("r"),
-        when(isSeed, lit(((Scale / ns) * 15) / 100))
-          .otherwise(lit(0L)).as("base"))
-      .persist()
+    val init = deg.select(col("v"), col("wtot"), teleport(share).as("r"),
+        teleport((share * 15) / 100).as("base"))
+      .persist() // referenced every iteration (wtot + teleport base)
     var ranks = init
     for (_ <- 1 to iters) {
-      val contrib = ranks.select(col("v").as("src"), expr("r div deg").as("c"))
+      // rank state (v, r, wtot) broadcasts; the per-EDGE share is an
+      // exact long product (w ≤ |lineitem|, r ≤ Scale) then one div
+      val contrib = ranks.select(col("v").as("src"), col("r"), col("wtot"))
       val inflow = edges.join(small(contrib), "src")
+        .select(col("dst"), expr("(r * w) div wtot").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-      ranks = init.select(col("v"), col("deg"), col("base"))
+      ranks = init.select(col("v"), col("wtot"), col("base"))
         .join(small(inflow), col("v") === col("dst"), "left")
-        .select(col("v"), col("deg"), col("base"),
+        .select(col("v"), col("wtot"), col("base"),
           (col("base") + expr("(85 * coalesce(inflow, 0L)) div 100")).as("r"))
     }
-    ranks
-      .filter(col("r") > 0) // unreachable-from-seeds vertices carry no rank
+    // unreachable-from-seeds vertices carry no rank
+    (if (isSeed.isDefined) ranks.filter(col("r") > 0) else ranks)
       .select(
         concat(
           when(col("v") % 2 === 0, lit("c")).otherwise(lit("s")),
@@ -332,94 +320,6 @@ object Graph {
        |    AS vertex,
        |  CAST(r AS BIGINT) AS rank_q
        |FROM it$iters ORDER BY rank_q DESC, vertex ASC LIMIT $topK""".stripMargin
-  }
-
-  /** WEIGHTED PageRank (q133): the q102 iteration with edge weights —
-    * an edge's share of its source's outflow is proportional to its
-    * weight instead of uniform. Weight = the number of order LINES
-    * linking the (customer, supplier) pair: a pair that traded 50 times
-    * is a 50× stronger endorsement than a one-off (the public weighted-
-    * PageRank/CommonCrawl-host-ranking construction, where link
-    * multiplicity weighs the edge).
-    *
-    * Same exact-integer fixed-point: contribution per edge =
-    * (r · w) div w_total(src), an exact long product (w ≤ |lineitem|,
-    * r ≤ Scale·damping-headroom, product ≪ Long.Max) then integer
-    * division — commutative/associative, so the DuckDB oracle replays
-    * every iteration bit-for-bit. Same broadcast-ranks/shuffle-twin
-    * shape: the |V|-row rank state (now carrying w_total) broadcasts,
-    * the weighted edge frame is persisted once and NEVER shuffles.
-    * Unit weights provably recover [[pageRank]] bit-for-bit
-    * (GraphSpec): w = 1 makes w_total = deg and (r·1) div deg = the
-    * unweighted contribution.
-    */
-  def weightedPageRank(
-      orders: DataFrame,
-      lineitem: DataFrame,
-      iters: Int = 3,
-      topK: Int = 50,
-      broadcastRanks: Boolean = true): DataFrame = {
-    require(iters >= 1 && topK >= 1)
-    val pairs = orders.select(col("o_orderkey"), col("o_custkey"))
-      .join(lineitem.select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(
-        (col("o_custkey") * 2).as("cu"),
-        (col("l_suppkey") * 2 + 1).as("su"))
-      .groupBy(col("cu"), col("su"))
-      .agg(count(lit(1)).as("w"))
-    // one explode, not a two-branch union; pairs persisted so the degree
-    // pass and the edge-cache build share one join+aggregate — see
-    // [[pageRank]] (r19)
-    val pairsP = pairs.persist()
-    val edges0 = pairsP
-      .select(explode(array(
-        struct(col("cu").as("src"), col("su").as("dst"), col("w")),
-        struct(col("su").as("src"), col("cu").as("dst"), col("w")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w"))
-    def small(df: DataFrame): DataFrame =
-      if (broadcastRanks) broadcast(df) else df
-    // ecnt rides the aggregate so |E| is collected by the same gate
-    // action that collects |V| (sizes the cached edge layout below)
-    val deg = edges0.groupBy(col("src"))
-      .agg(sum(col("w")).as("wtot"), count(lit(1)).as("ecnt")).persist()
-    // |V| and |E| as collected literals — see [[pageRank]] (the r18
-    // duplicate edge-scan fix); same bounded 1-row action, same exact
-    // `div`.
-    val gate = deg
-      .agg(count(lit(1)).as("n"), coalesce(sum("ecnt"), lit(0L)).as("m"))
-      .collect()(0)
-    val n = math.max(gate.getLong(0), 1L) // empty graph: init has no rows
-    val w0 = edgeWidth(orders.sparkSession, gate.getLong(1))
-    val edges =
-      (if (w0 < orders.sparkSession.sparkContext.defaultParallelism)
-         edges0.repartition(w0, col("src"))
-       else edges0).persist()
-    val init = deg.select(col("src").as("v"), col("wtot"))
-      .select(col("v"), col("wtot"),
-        lit(Scale / n).as("r"),
-        lit(((Scale / n) * 15) / 100).as("base"))
-      .persist()
-    var ranks = init
-    for (_ <- 1 to iters) {
-      // rank state (v, r, wtot) broadcasts; the per-EDGE share is an
-      // exact long product then one integer division
-      val contrib = ranks.select(col("v").as("src"), col("r"), col("wtot"))
-      val inflow = edges.join(small(contrib), "src")
-        .select(col("dst"), expr("(r * w) div wtot").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-      ranks = init.select(col("v"), col("wtot"), col("base"))
-        .join(small(inflow), col("v") === col("dst"), "left")
-        .select(col("v"), col("wtot"), col("base"),
-          (col("base") + expr("(85 * coalesce(inflow, 0L)) div 100")).as("r"))
-    }
-    ranks.select(
-        concat(
-          when(col("v") % 2 === 0, lit("c")).otherwise(lit("s")),
-          expr("v div 2")).as("vertex"),
-        col("r").as("rank_q"))
-      .orderBy(desc("rank_q"), asc("vertex"))
-      .limit(topK)
   }
 
   /** DuckDB oracle for [[weightedPageRank]] — the weighted iteration as

@@ -123,15 +123,25 @@ private[graft] object Lsh {
     *
     * Callers skip the preflight entirely when a slice bound or a hot-
     * bucket cap is already in place — those paths carry their own bound.
+    *
+    * `owned` are the frames the caller persisted for the plan it was
+    * about to return. A failed preflight hands the caller no plan to own,
+    * so they are unpersisted here, in reverse of the order given (pass
+    * them in persist order), before the failure is rethrown.
     */
   def preflightFullCorpus(
-      bk: DataFrame, keys: Seq[String], pairBudget: Option[Long]): Unit =
-    pairBudget.foreach { budget =>
+      bk: DataFrame, keys: Seq[String], pairBudget: Option[Long],
+      owned: DataFrame*): Unit =
+    try pairBudget.foreach { budget =>
       val est = estimatedPairs(bk, keys)
       require(est <= budget,
         s"unguarded full-corpus candidate join would enumerate $est raw " +
           s"pairs (budget $budget): cap degenerate buckets " +
           "(hotBandMax/hotBucketMax), bound the query side (sliceMax), " +
           "or raise/disable pairBudget to accept the cost")
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        owned.reverse.foreach(_.unpersist(false))
+        throw e
     }
 }

@@ -48,12 +48,6 @@ object NearDup {
   def bandPlan(tau: Double, nHashes: Int = K): (Int, Int) =
     Lsh.bandPlan(tau, nHashes)
 
-  /** P(candidate | jaccard = s) under a (bands, rowsPerBand) plan —
-    * the recall curve [[bandPlan]] optimizes; see [[Lsh.candidateProb]].
-    */
-  def candidateProb(bands: Int, rowsPerBand: Int, s: Double): Double =
-    Lsh.candidateProb(bands, rowsPerBand, s)
-
   /** (a_i, b_i) of the hash family, reproducibly derived from md5 so the
     * same literals can be embedded in the DuckDB oracle text.
     */
@@ -167,7 +161,7 @@ object NearDup {
     val bk = bandsWith(signatures(tok), plan).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keys = Seq("band", "bkey")
     if (sliceMax.isEmpty && hotBandMax.isEmpty)
-      Lsh.preflightFullCorpus(bk, keys, pairBudget)
+      Lsh.preflightFullCorpus(bk, keys, pairBudget, tok, bk)
     // wide only for the full-corpus candidate set — see [[lshNearDupPairs]]
     verifiedJaccard(candidatesFromBands(bk, sliceMax, hotBandMax, keys), tok, tok,
       "doc_a", "doc_b", threshold, wide = sliceMax.isEmpty)
@@ -223,15 +217,10 @@ object NearDup {
     // safe-by-default (the q151 lesson): a full-corpus call with NO hot-
     // bucket cap sizes its own candidate space first and fails fast with
     // the estimate instead of enumerating a quadratic blowup (bk is
-    // persisted, so the preflight's scan is reused by the join). A failed
-    // preflight hands the caller no plan to own, so it releases both
-    // caches itself.
+    // persisted, so the preflight's scan is reused by the join); a failed
+    // preflight releases both caches
     if (sliceMax.isEmpty && hotBandMax.isEmpty)
-      try Lsh.preflightFullCorpus(bk, BandKeys, pairBudget)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          bk.unpersist(false); tok.unpersist(false); throw e
-      }
+      Lsh.preflightFullCorpus(bk, BandKeys, pairBudget, tok, bk)
     // wide = MODE-derived (r19, the VERDICT's width condition): the
     // respread pays off exactly when the candidate set is corpus-scale —
     // the full-corpus self-join modes (q151's sourceDupMatrix, unsliced

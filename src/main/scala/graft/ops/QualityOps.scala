@@ -860,7 +860,7 @@ object QualityOps {
     // metric) projection of the ONE materialized signal frame and join
     // the rank columns back on doc_id (same total orders, same rank
     // values). The legs are independent multi-action pipelines, so they
-    // build concurrently (guide §2.6 — the q119 pattern; isolated A/B
+    // build as concurrent [[Legs]] (the q119 pattern; isolated A/B
     // there: 0.853 vs 0.993 s). The sig persist is materialized by a
     // bounded count() before the legs start so they race on nothing;
     // lifetime caller-owned.
@@ -871,22 +871,10 @@ object QualityOps {
       Ranks.withGlobalRowNumber(
         sigP.select(col("doc_id"), col(metric)), order, out)
         .select(col("doc_id"), col(out))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    val (rLen, rTtr, rStop) =
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val a = scala.concurrent.Future(
-          leg("n_tok", Seq(desc("n_tok"), asc("doc_id")), "r_len"))
-        val b = scala.concurrent.Future(
-          leg("ttr", Seq(desc("ttr"), asc("doc_id")), "r_ttr"))
-        val c = scala.concurrent.Future(
-          leg("stop_ratio", Seq(asc("stop_ratio"), asc("doc_id")), "r_stop"))
-        import scala.concurrent.duration.Duration
-        (scala.concurrent.Await.result(a, Duration.Inf),
-          scala.concurrent.Await.result(b, Duration.Inf),
-          scala.concurrent.Await.result(c, Duration.Inf))
-      } finally pool.shutdown()
+    val Seq(rLen, rTtr, rStop) = Legs.run(sigP.sparkSession.sparkContext)(
+      () => leg("n_tok", Seq(desc("n_tok"), asc("doc_id")), "r_len"),
+      () => leg("ttr", Seq(desc("ttr"), asc("doc_id")), "r_ttr"),
+      () => leg("stop_ratio", Seq(asc("stop_ratio"), asc("doc_id")), "r_stop"))
     sigP.select(col("doc_id"))
       .join(rLen, "doc_id")
       .join(rTtr, "doc_id")

@@ -94,9 +94,10 @@ object TextOps {
       }: _*)).as("bk"))
       .select(col("doc_id"), col("fp"), col("bk.band").as("band"), col("bk.bv").as("bv"))
     val keys = Seq("band", "bv")
-    // safe-by-default (the q151 lesson — see Lsh.preflightFullCorpus)
+    // safe-by-default (the q151 lesson — see Lsh.preflightFullCorpus);
+    // a failed preflight releases the fingerprint cache
     if (sliceMax.isEmpty && hotBandMax.isEmpty)
-      Lsh.preflightFullCorpus(banded, keys, pairBudget)
+      Lsh.preflightFullCorpus(banded, keys, pairBudget, fp)
     val guarded = Lsh.guardHotBuckets(banded, keys, hotBandMax)
     val lhs = guarded
       .select(col("doc_id").as("doc_a"), col("fp").as("fp_a"), col("band"), col("bv"))

@@ -1431,20 +1431,9 @@ object StreamingEtl {
       reportDir: String,
       valueCol: String,
       bucketWidth: Double): Unit =
-    runIndexAppend(stream, checkpoint, (batch, batchId) => {
-      val spark = batch.sparkSession
-      val ref = spark.read.parquet(refHistogramPath)
-        .select(col("bucket"), col("cnt").as("ref_cnt"))
-      val cur = graft.ops.Drift.histogram(batch, valueCol, bucketWidth)
-        .select(col("bucket"), col("cnt").as("cur_cnt"))
-      val counts = ref.join(cur, Seq("bucket"), "full_outer")
-        .select(col("bucket"),
-          coalesce(col("ref_cnt"), lit(0L)).as("ref_cnt"),
-          coalesce(col("cur_cnt"), lit(0L)).as("cur_cnt"))
-      graft.ops.Drift.psiFromCounts(counts)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$reportDir/batch=$batchId")
-    })
+    runCountsGate(stream, checkpoint, refHistogramPath, reportDir, "bucket",
+      graft.ops.Drift.histogram(_, valueCol, bucketWidth),
+      graft.ops.Drift.psiFromCounts(_))
 
   /** Streaming CATEGORICAL drift gate — q157's per-category PSI as the
     * same per-batch contract check: micro-batch category counts scored
@@ -1462,21 +1451,9 @@ object StreamingEtl {
       refCountsPath: String,
       reportDir: String,
       catCol: String): Unit =
-    runIndexAppend(stream, checkpoint, (batch, batchId) => {
-      val spark = batch.sparkSession
-      val ref = spark.read.parquet(refCountsPath)
-        .select(col("category"), col("cnt").as("ref_cnt"))
-      val cur = batch.filter(col(catCol).isNotNull)
-        .groupBy(col(catCol).as("category"))
-        .agg(count(lit(1)).as("cur_cnt"))
-      val counts = ref.join(cur, Seq("category"), "full_outer")
-        .select(col("category"),
-          coalesce(col("ref_cnt"), lit(0L)).as("ref_cnt"),
-          coalesce(col("cur_cnt"), lit(0L)).as("cur_cnt"))
-      graft.ops.Drift.psiFromCounts(counts, keyCol = "category")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$reportDir/batch=$batchId")
-    })
+    runCountsGate(stream, checkpoint, refCountsPath, reportDir, "category",
+      nonNullCounts(_, catCol, "category"),
+      graft.ops.Drift.psiFromCounts(_, keyCol = "category"))
 
   /** Streaming KS drift gate — q160's exact two-sample statistic as the
     * per-batch contract check: the micro-batch's per-value counts
@@ -1494,21 +1471,41 @@ object StreamingEtl {
       refCountsPath: String,
       reportDir: String,
       valueCol: String): Unit =
+    runCountsGate(stream, checkpoint, refCountsPath, reportDir, "v",
+      nonNullCounts(_, valueCol, "v"), graft.ops.Drift.ksFromCounts)
+
+  /** The body the three drift gates share: per micro-batch, full-outer
+    * join the reference's (key, cnt) table at `refPath` with the batch's
+    * own (key, cnt) counts, zero-fill the side a key is missing from (a
+    * key unseen in either period stays in the signal), score the
+    * (key, ref_cnt, cur_cnt) frame and overwrite `reportDir/batch=<id>`.
+    */
+  private def runCountsGate(
+      stream: DataFrame,
+      checkpoint: String,
+      refPath: String,
+      reportDir: String,
+      key: String,
+      batchCounts: DataFrame => DataFrame,
+      score: DataFrame => DataFrame): Unit =
     runIndexAppend(stream, checkpoint, (batch, batchId) => {
-      val spark = batch.sparkSession
-      val ref = spark.read.parquet(refCountsPath)
-        .select(col("v"), col("cnt").as("ref_cnt"))
-      val cur = batch.filter(col(valueCol).isNotNull)
-        .groupBy(col(valueCol).as("v"))
-        .agg(count(lit(1)).as("cur_cnt"))
-      val counts = ref.join(cur, Seq("v"), "full_outer")
-        .select(col("v"),
+      val ref = batch.sparkSession.read.parquet(refPath)
+        .select(col(key), col("cnt").as("ref_cnt"))
+      val cur = batchCounts(batch).select(col(key), col("cnt").as("cur_cnt"))
+      val counts = ref.join(cur, Seq(key), "full_outer")
+        .select(col(key),
           coalesce(col("ref_cnt"), lit(0L)).as("ref_cnt"),
           coalesce(col("cur_cnt"), lit(0L)).as("cur_cnt"))
-      graft.ops.Drift.ksFromCounts(counts)
+      score(counts)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$reportDir/batch=$batchId")
     })
+
+  /** (key, cnt) over the non-null values of `valueCol`. */
+  private def nonNullCounts(df: DataFrame, valueCol: String, key: String): DataFrame =
+    df.filter(col(valueCol).isNotNull)
+      .groupBy(col(valueCol).as(key))
+      .agg(count(lit(1)).as("cnt"))
 
   /** Streaming near-dup ADMISSION GATE over the persisted signature
     * store — the nightly-crawl loop composed end-to-end. Per micro-batch:

@@ -150,6 +150,25 @@ class FullCorpusSpec extends SparkSpec {
     assert(ex.getMessage.contains("budget 1000"), s"no budget in: ${ex.getMessage}")
     // the message carries the actual estimate (32 bands x C(200,2) = 636800)
     assert(ex.getMessage.contains("636800"), s"estimate absent: ${ex.getMessage}")
+    // every other operator that persists before its preflight releases
+    // its caches on failure too: the planned MinHash form, SimHash pairs
+    // over identical fingerprints, and embedding near-dups over identical
+    // vectors (every bucket of every table holds all 200)
+    val hotEmb = spark.range(200L).select(col("id").as("vec_id"))
+      .crossJoin(emb.select("embedding").limit(1))
+    val leaky: Seq[(String, () => DataFrame)] = Seq(
+      "lshNearDupPairsPlanned" -> (() => NearDup.lshNearDupPairsPlanned(hot,
+        NearDup.bandPlan(0.18), sliceMax = None, pairBudget = Some(1000L))),
+      "simhashPairs" -> (() => TextOps.simhashPairs(hot, sliceMax = None,
+        pairBudget = Some(1000L))),
+      "AnnLsh.nearDupPairs" -> (() => AnnLsh.nearDupPairs(hotEmb, sliceMax = None,
+        pairBudget = Some(1000L))))
+    leaky.foreach { case (label, call) =>
+      val e = intercept[IllegalArgumentException](call().collect())
+      assert(e.getMessage.contains("budget 1000"), s"$label: ${e.getMessage}")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$label: a failed preflight left its caches behind")
+    }
     // remediations still work: a hot-band cap skips the preflight entirely,
     // an explicit opt-out accepts the cost, and a bounded slice never
     // triggers it
