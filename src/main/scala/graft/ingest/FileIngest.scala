@@ -280,7 +280,7 @@ object FileIngest {
     */
   private def defaultAttemptTag(): String =
     Option(org.apache.spark.TaskContext.get())
-      .map(tc => s"${tc.stageId}-${tc.partitionId}-${tc.taskAttemptId}")
+      .map(tc => s"${tc.stageId()}-${tc.partitionId()}-${tc.taskAttemptId()}")
       .getOrElse("driver-" + java.util.UUID.randomUUID())
 
   /** Write-then-rename publish: materialize the artifact at an

@@ -72,6 +72,9 @@ object AnnLsh {
     graft.functions.VectorFunctions.lshBucketKeys(vecCol, flat, L, H, dim)
   }
 
+  /** The equi-join key of a [[buckets]] frame: a candidate pair shares one. */
+  private[graft] val BucketKeys = Seq("l", "bucket")
+
   /** (vec_id, l, bucket) — L bucket keys per vector, computed map-side. */
   def buckets(emb: DataFrame, dim: Int, vecCol: String = "embedding"): DataFrame =
     emb
@@ -85,11 +88,12 @@ object AnnLsh {
     * broadcasts its bucket keys; `None` makes EVERY vector a query — the
     * full k-NN-graph shape embedding dedup runs — via a shuffle
     * sort-merge self-equi-join on (table, bucket): no broadcast, no
-    * driver state, AQE splits skewed buckets, `hotBucketMax` optionally
-    * drops degenerate ones ([[Lsh.guardHotBuckets]]).
+    * driver state, AQE splits skewed buckets. That unbounded form sizes
+    * its raw candidate space against [[Lsh.DefaultPairBudget]] first and
+    * fails fast over it, releasing its caches ([[Lsh.candidatePairs]]).
     */
   def annTopK(emb: DataFrame, dim: Int = 64, queryMax: Option[Long] = Some(5L),
-      k: Int = 5, hotBucketMax: Option[Long] = None): DataFrame = {
+      k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // norm rides WITH the vector: one persisted (vec_id, embedding, nrm)
     // frame means the verify stage is TWO joins (one per pair side), not
@@ -100,8 +104,8 @@ object AnnLsh {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bk = buckets(vecs, dim)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = candidatesFromBuckets(bk, "query_id", strict = false, queryMax, hotBucketMax)
-      .withColumnRenamed("vec_id", "neighbor_id")
+    val cand = Lsh.candidatePairs(bk, BucketKeys, "vec_id", "query_id", "neighbor_id",
+      queryMax, strict = false, owned = Seq(vecs, bk))
     val sims = cand
       .join(vecs.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("na")), "query_id")
@@ -118,26 +122,6 @@ object AnnLsh {
       .orderBy("query_id", "rnk")
   }
 
-  /** Distinct candidate pairs from the (table, bucket) equi-join — the
-    * join whose physical shape FullCorpusSpec pins down. `leftAs` names
-    * the query/left id column; `strict` selects `<` (unordered pairs) vs
-    * `=!=` (query → neighbor) self-pairing. Output (leftAs, vec_id).
-    */
-  private[graft] def candidatesFromBuckets(
-      bk: DataFrame,
-      leftAs: String,
-      strict: Boolean,
-      sliceMax: Option[Long],
-      hotBucketMax: Option[Long]): DataFrame = {
-    val keys = Seq("l", "bucket")
-    val guarded = Lsh.guardHotBuckets(bk, keys, hotBucketMax)
-    val lhs = guarded.select(col("vec_id").as(leftAs), col("l"), col("bucket"))
-    Lsh.candidateJoin(guarded, lhs, keys, leftAs, sliceMax)
-      .filter(if (strict) col(leftAs) < col("vec_id") else col(leftAs) =!= col("vec_id"))
-      .select(col(leftAs), col("vec_id"))
-      .distinct()
-  }
-
   /** Embedding-cosine near-duplicate pairs: same LSH bucketing as
     * [[annTopK]], but emitting every candidate pair (vec_a < vec_b) whose
     * exact cosine clears `threshold` — the embedding-space analogue of
@@ -152,7 +136,6 @@ object AnnLsh {
       dim: Int = 64,
       sliceMax: Option[Long] = Some(100L),
       threshold: Double = 0.3,
-      hotBucketMax: Option[Long] = None,
       pairBudget: Option[Long] = Some(Lsh.DefaultPairBudget),
       // `ordered = false` skips the final global sort (a range exchange
       // plus its sampling job) for callers that immediately re-shuffle —
@@ -167,13 +150,9 @@ object AnnLsh {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bk = buckets(vecs, dim)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // safe-by-default (the q151 lesson — see Lsh.preflightFullCorpus);
-    // bk is persisted, so the preflight's scan is reused by the join; a
-    // failed preflight releases both caches
-    if (sliceMax.isEmpty && hotBucketMax.isEmpty)
-      Lsh.preflightFullCorpus(bk, Seq("l", "bucket"), pairBudget, vecs, bk)
-    val cand = candidatesFromBuckets(bk, "vec_a", strict = true, sliceMax, hotBucketMax)
-      .withColumnRenamed("vec_id", "vec_b")
+    // bk is persisted, so a preflight's scan is reused by the join
+    val cand = Lsh.candidatePairs(bk, BucketKeys, "vec_id", "vec_a", "vec_b", sliceMax,
+      pairBudget = pairBudget, owned = Seq(vecs, bk))
     cand
       .join(vecs.select(col("vec_id").as("vec_a"), col("embedding").as("va"),
         col("nrm").as("na")), "vec_a")

@@ -104,68 +104,79 @@ object Clusters {
       // would serialize every round's edges-to-labels join on one task
       .repartition(spark.sparkContext.defaultParallelism, col("b"))
       .persist()
-    // initialization fused with the first propagation: label(v) starts at
-    // min(v, min neighbor) — computed in the same single pass that
-    // "labels = v, then round 1" would need, saving one full round of
-    // truncate + convergence check (edges are bidirectional, so every
-    // node appears on the `a` side)
-    var cur = truncate(
-      edges.groupBy(col("a").as("v"))
-        .agg(least(min(col("b")), min(col("a"))).as("lbl")))
-    def labels = cur._1
-    // labels only ever decrease, so the label-sum is strictly decreasing
-    // until the fixpoint: comparing sums detects convergence with one
-    // cheap aggregate instead of a join of consecutive rounds
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum("lbl"), lit(0L))).head().getLong(0)
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var changed = true
-    while (changed && iter < maxIter) {
-      // one round = join + ONE aggregate. The propagated labels flow
-      // straight from the join into the groupBy — min() is associative,
-      // so the aggregate's map-side combine performs the per-neighbor
-      // reduction without an extra shuffle. The former
-      // `labels.union(propagated)` own-label branch is PROVABLY
-      // redundant (r19). Write B_t(v) for v's closed t-hop ball and
-      // lbl_t for the labels after round t. Init is the fused
-      // min(own, neighbors), so lbl_0(v) = min over B_1(v). Edges are
-      // bidirectional and every node has a neighbour, so for t >= 1 the
-      // union over v's neighbours u of their t-balls is v's (t+1)-ball:
-      // ∪_{u~v} B_t(u) = B_{t+1}(v). By induction the neighbour-min
-      // lbl_t(v) = min over B_{t+1}(v), a ball that holds v itself, so
-      // neighbor-min EQUALS min(own, neighbor-min) every round, and
-      // every node survives because every node is an `a` endpoint.
-      // Dropping the branch removes a full labels-side scan per round
-      // and makes round batching recompute-free (each round's frame is
-      // referenced exactly once by the next).
-      //
-      // Rounds are BATCHED two per convergence check (r19): the
-      // truncate + label-sum action pair is the loop's driver-paced
-      // latency, and labels only ever decrease, so the sum over TWO
-      // rounds is still strictly decreasing until the fixpoint —
-      // equality proves both rounds were no-ops (a fixpoint persists).
-      // The worst case computes one redundant no-op round past
-      // convergence; near-dup diameters are 2-3, so halving the action
-      // count wins at every scale while the per-round shuffle work is
-      // unchanged.
-      val rounds = math.min(2, maxIter - iter)
-      var lbl = labels
-      for (_ <- 1 to rounds) {
-        lbl = edges
-          .join(lbl.select(col("v").as("b"), col("lbl").as("nlbl")), "b")
-          .groupBy(col("a").as("v")).agg(min(col("nlbl")).as("lbl"))
+    // an action that throws (bad input, a cancelled job) leaves no cache
+    // behind: the edges always go, the live rounds go on failure, and on
+    // success the final round's blocks back the returned labels
+    var cur: (DataFrame, () => Unit) = null
+    var next: (DataFrame, () => Unit) = null
+    try {
+      // initialization fused with the first propagation: label(v) starts at
+      // min(v, min neighbor) — computed in the same single pass that
+      // "labels = v, then round 1" would need, saving one full round of
+      // truncate + convergence check (edges are bidirectional, so every
+      // node appears on the `a` side)
+      cur = truncate(
+        edges.groupBy(col("a").as("v"))
+          .agg(least(min(col("b")), min(col("a"))).as("lbl")))
+      def labels = cur._1
+      // labels only ever decrease, so the label-sum is strictly decreasing
+      // until the fixpoint: comparing sums detects convergence with one
+      // cheap aggregate instead of a join of consecutive rounds
+      def labelSum(df: DataFrame): Long =
+        df.agg(coalesce(sum("lbl"), lit(0L))).head().getLong(0)
+      var prevSum = labelSum(labels)
+      var iter = 0
+      var changed = true
+      while (changed && iter < maxIter) {
+        // one round = join + ONE aggregate. The propagated labels flow
+        // straight from the join into the groupBy — min() is associative,
+        // so the aggregate's map-side combine performs the per-neighbor
+        // reduction without an extra shuffle. The former
+        // `labels.union(propagated)` own-label branch is PROVABLY
+        // redundant (r19). Write B_t(v) for v's closed t-hop ball and
+        // lbl_t for the labels after round t. Init is the fused
+        // min(own, neighbors), so lbl_0(v) = min over B_1(v). Edges are
+        // bidirectional and every node has a neighbour, so for t >= 1 the
+        // union over v's neighbours u of their t-balls is v's (t+1)-ball:
+        // ∪_{u~v} B_t(u) = B_{t+1}(v). By induction the neighbour-min
+        // lbl_t(v) = min over B_{t+1}(v), a ball that holds v itself, so
+        // neighbor-min EQUALS min(own, neighbor-min) every round, and
+        // every node survives because every node is an `a` endpoint.
+        // Dropping the branch removes a full labels-side scan per round
+        // and makes round batching recompute-free (each round's frame is
+        // referenced exactly once by the next).
+        //
+        // Rounds are BATCHED two per convergence check (r19): the
+        // truncate + label-sum action pair is the loop's driver-paced
+        // latency, and labels only ever decrease, so the sum over TWO
+        // rounds is still strictly decreasing until the fixpoint —
+        // equality proves both rounds were no-ops (a fixpoint persists).
+        // The worst case computes one redundant no-op round past
+        // convergence; near-dup diameters are 2-3, so halving the action
+        // count wins at every scale while the per-round shuffle work is
+        // unchanged.
+        val rounds = math.min(2, maxIter - iter)
+        var lbl = labels
+        for (_ <- 1 to rounds) {
+          lbl = edges
+            .join(lbl.select(col("v").as("b"), col("lbl").as("nlbl")), "b")
+            .groupBy(col("a").as("v")).agg(min(col("nlbl")).as("lbl"))
+        }
+        next = truncate(lbl)
+        val nextSum = labelSum(next._1) // materializes `next` before freeing prev
+        changed = nextSum != prevSum
+        prevSum = nextSum
+        cur._2() // release the superseded round's storage
+        cur = next
+        next = null
+        iter += rounds
       }
-      val next = truncate(lbl)
-      val nextSum = labelSum(next._1) // materializes `next` before freeing prev
-      changed = nextSum != prevSum
-      prevSum = nextSum
-      cur._2() // release the superseded round's storage
-      cur = next
-      iter += rounds
-    }
-    edges.unpersist()
-    labels.select(col("v"), col("lbl").as("cluster_id"))
+      labels.select(col("v"), col("lbl").as("cluster_id"))
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        Seq(next, cur).filter(_ != null).foreach(_._2())
+        throw e
+    } finally edges.unpersist()
   }
 
   /** Append `cluster_size` to a (node, cluster_id) frame. Default: a

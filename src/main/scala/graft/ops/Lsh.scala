@@ -4,10 +4,80 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Shared plumbing for the LSH-family candidate generators ([[NearDup]],
-  * [[AnnLsh]], [[TextOps.simhashPairs]]).
+/** The LSH candidate step shared by every similarity operator, in one
+  * place ([[candidatePairs]]): the pair-budget preflight, the hot-bucket
+  * guard, the slice-or-merge candidate join and the pair dedup. Callers:
+  *   - [[TextOps.simhashPairs]] (4 × 8-bit SimHash bands, [[bitBands]]);
+  *   - [[NearDup.lshNearDupPairs]] and [[NearDup.lshNearDupPairsPlanned]]
+  *     (MinHash bands);
+  *   - [[AnnLsh.annTopK]] (directed pairing) and [[AnnLsh.nearDupPairs]]
+  *     ((table, bucket) keys);
+  *   - [[Multimodal]]'s image, audio and video near-dups (4 × 16-bit
+  *     bands, [[bitBands]]; video carries its frame index).
+  *
+  * The one preflight rule: a call with no slice bound (`sliceMax = None`)
+  * and no hot-bucket cap sizes its raw candidate space first and fails
+  * fast over `pairBudget` ([[preflightFullCorpus]]); a slice or a cap is
+  * its own bound and skips it. The dedup gate's row-bounded within-batch
+  * check ([[graft.streaming.StreamingEtl.runDedupGate]]) is the only other
+  * caller of the preflight.
   */
 private[graft] object Lsh {
+
+  /** Explode a 64-bit-or-narrower hash column into `bands` bit-bands of
+    * `bits` bits each: every column of `df` plus (band, bv), one row per
+    * band, bv = (hash >> bits·band) & (2^bits − 1). Two hashes within
+    * Hamming distance < `bands` agree on at least one band (pigeonhole).
+    */
+  def bitBands(df: DataFrame, hash: String, bands: Int, bits: Int): DataFrame = {
+    val kept = df.columns.toSeq.map(col)
+    df.select(kept :+ explode(array((0 until bands).map { b =>
+        struct(lit(b).as("band"),
+          shiftright(col(hash), bits * b).bitwiseAND(lit((1L << bits) - 1)).as("bv"))
+      }: _*)).as("bk"): _*)
+      .select(kept ++ Seq(col("bk.band").as("band"), col("bk.bv").as("bv")): _*)
+  }
+
+  /** Distinct candidate pairs of the rows of `banded` that share a bucket
+    * `keys`: (`left`, `right`, c_a, c_b for each `carried` column c).
+    *
+    *   - `sliceMax = Some(m)` broadcasts the bounded left side
+    *     (`left < m`) — the zero-shuffle bounded-batch shape; `None` is a
+    *     hinted shuffle sort-merge self-equi-join on `keys` — full corpus
+    *     on both sides, nothing broadcast whatever the size estimates
+    *     say, AQE skew-splits hot buckets.
+    *   - `hotCap` drops bucket groups larger than the cap first
+    *     ([[guardHotBuckets]]).
+    *   - With neither a slice nor a cap, the raw candidate count is sized
+    *     against `pairBudget` first ([[preflightFullCorpus]]); a failed
+    *     preflight unpersists `owned` (the frames the caller persisted,
+    *     in persist order) before rethrowing.
+    *   - `strict` keeps `left < right` (unordered pairs); otherwise
+    *     `left =!= right` (every query → neighbor direction).
+    */
+  def candidatePairs(
+      banded: DataFrame,
+      keys: Seq[String],
+      id: String,
+      left: String,
+      right: String,
+      sliceMax: Option[Long],
+      carried: Seq[String] = Nil,
+      hotCap: Option[Long] = None,
+      pairBudget: Option[Long] = Some(DefaultPairBudget),
+      strict: Boolean = true,
+      owned: Seq[DataFrame] = Nil): DataFrame = {
+    if (sliceMax.isEmpty && hotCap.isEmpty)
+      preflightFullCorpus(banded, keys, pairBudget, owned: _*)
+    val guarded = guardHotBuckets(banded, keys, hotCap)
+    val lhs = guarded.select(
+      (col(id).as(left) +: carried.map(c => col(c).as(s"${c}_a"))) ++ keys.map(col): _*)
+    candidateJoin(guarded, lhs, keys, left, sliceMax)
+      .filter(if (strict) col(left) < col(id) else col(left) =!= col(id))
+      .select(Seq(col(left), col(id).as(right)) ++
+        carried.flatMap(c => Seq(col(s"${c}_a"), col(c).as(s"${c}_b"))): _*)
+      .distinct()
+  }
 
   /** Drop rows belonging to bucket-key groups larger than `cap` — the
     * hot-bucket guard for unsliced (full-corpus) candidate self-joins.
@@ -25,7 +95,7 @@ private[graft] object Lsh {
     * bucket keys is the same partitioning the candidate self-join needs,
     * so the guard adds no extra exchange ahead of a sort-merge join.
     */
-  def guardHotBuckets(df: DataFrame, keys: Seq[String], cap: Option[Long]): DataFrame =
+  private def guardHotBuckets(df: DataFrame, keys: Seq[String], cap: Option[Long]): DataFrame =
     cap.fold(df) { c =>
       val w = Window.partitionBy(keys.map(col): _*)
       df.withColumn("__bsz", count(lit(1)).over(w))
@@ -33,15 +103,11 @@ private[graft] object Lsh {
         .drop("__bsz")
     }
 
-  /** The sliced-vs-full candidate join shared by every LSH family member
-    * (one definition so a future fix can't drift across call sites):
-    * `Some(m)` broadcasts the bounded query side (`leftId < m`) — the
-    * zero-shuffle bounded-batch shape; `None` is a hinted shuffle
-    * sort-merge self-equi-join on the bucket keys — full corpus on both
-    * sides, nothing broadcast regardless of size estimates, AQE
-    * skew-splits hot buckets.
+  /** The sliced-vs-full candidate join: `Some(m)` broadcasts the bounded
+    * query side (`leftId < m`); `None` is a hinted shuffle sort-merge
+    * self-equi-join on the bucket keys.
     */
-  def candidateJoin(guarded: DataFrame, lhs: DataFrame, keys: Seq[String],
+  private def candidateJoin(guarded: DataFrame, lhs: DataFrame, keys: Seq[String],
       leftId: String, sliceMax: Option[Long]): DataFrame =
     sliceMax match {
       case Some(m) => guarded.join(broadcast(lhs.filter(col(leftId) < m)), keys)
@@ -121,8 +187,9 @@ private[graft] object Lsh {
     * estimate and the remediation (cap hot buckets, or raise/disable the
     * budget to knowingly accept the cost). `pairBudget = None` opts out.
     *
-    * Callers skip the preflight entirely when a slice bound or a hot-
-    * bucket cap is already in place — those paths carry their own bound.
+    * [[candidatePairs]] skips the preflight entirely when a slice bound
+    * or a hot-bucket cap is already in place — those paths carry their
+    * own bound.
     *
     * `owned` are the frames the caller persisted for the plan it was
     * about to return. A failed preflight hands the caller no plan to own,
@@ -137,7 +204,7 @@ private[graft] object Lsh {
       require(est <= budget,
         s"unguarded full-corpus candidate join would enumerate $est raw " +
           s"pairs (budget $budget): cap degenerate buckets " +
-          "(hotBandMax/hotBucketMax), bound the query side (sliceMax), " +
+          "(hotBandMax), bound the query side (sliceMax/queryMax), " +
           "or raise/disable pairBudget to accept the cost")
     } catch {
       case scala.util.control.NonFatal(e) =>

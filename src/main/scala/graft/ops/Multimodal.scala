@@ -307,34 +307,30 @@ object Multimodal {
       .toDF("id", "dhash")
   }
 
-  /** Perceptual near-duplicate image pairs: dHash per payload, 16-bit
-    * band equi-join for candidates (two 64-bit hashes within hamming
-    * `maxHamming` <= 3 must share >= 1 of the 4 bands — pigeonhole, so
-    * banding loses nothing), exact Hamming verify on the candidate
-    * hashes only — no payload bytes cross the wire after the hash pass.
-    * Output (id_a, id_b, hamming). `sliceMax`/`hotBandMax` follow
-    * [[graft.ops.Lsh]]'s slice/guard contract (q30's shapes).
+  /** Perceptual near-duplicate image pairs: dHash per payload, then the
+    * shared band/verify machinery ([[hammingPairs]]). Output
+    * (id_a, id_b, hamming).
     */
-  def imageNearDupPairs(
-      items: Dataset[MediaItem],
-      maxHamming: Int = 3,
-      sliceMax: Option[Long] = Some(100L),
-      hotBandMax: Option[Long] = None): DataFrame =
-    hammingBandPairs(dHashes(items), "dhash", maxHamming, sliceMax, hotBandMax)
+  def imageNearDupPairs(items: Dataset[MediaItem], maxHamming: Int = 3): DataFrame =
+    hammingPairs(dHashes(items), "dhash", maxHamming)
+      .select(col("id_a"), col("id_b"), col("hamming"))
+      .orderBy("id_a", "id_b")
 
-  /** The shared 64-bit-fingerprint matcher behind [[imageNearDupPairs]]
-    * and [[audioNearDupPairs]]: 4 × 16-bit band equi-join for candidates
-    * (two hashes within hamming ≤ 3 must share ≥ 1 band — pigeonhole,
-    * banding loses nothing), exact Hamming verify on the candidate
+  /** The shared band → candidate → Hamming body behind the image, audio
+    * and video near-dups: 4 × 16-bit band equi-join for candidates (two
+    * 64-bit hashes within hamming ≤ 3 must share ≥ 1 band — pigeonhole,
+    * so banding loses nothing), the id_a < 100 slice broadcast
+    * ([[Lsh.candidatePairs]]), exact Hamming verify on the candidate
     * hashes only — payload bytes never cross the wire after the hash
-    * pass. `hashed` is (id, <hashCol>).
+    * pass. `hashed` is (id, <carried>..., <hashCol>); the output is
+    * (id_a, id_b, c_a, c_b per carried and hash column, hamming) for
+    * every distinct candidate pair within `maxHamming`.
     */
-  private def hammingBandPairs(
+  private def hammingPairs(
       hashed0: DataFrame,
       hashCol: String,
       maxHamming: Int,
-      sliceMax: Option[Long],
-      hotBandMax: Option[Long]): DataFrame = {
+      carried: Seq[String] = Nil): DataFrame = {
     require(maxHamming <= 3, "4 x 16-bit bands are pigeonhole-complete only to hamming 3")
     // checkpoint, not persist: the decode pass materializes ONCE (both
     // candidate-join sides read the checkpointed blocks) and the blocks
@@ -342,30 +338,10 @@ object Multimodal {
     // advisory); dir-aware RELIABLE form so an executor loss between the
     // two join-side reads can't abort the run at cluster scale
     val hashed = Checkpoints.materialize(hashed0)
-    val banded = hashed.select(
-      col("id"), col(hashCol),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col(hashCol), 16 * b).bitwiseAND(lit(0xffffL)).as("bv"))
-      }: _*)).as("bk"))
-      .select(col("id"), col(hashCol),
-        col("bk.band").as("band"), col("bk.bv").as("bv"))
-    val keys = Seq("band", "bv")
-    // safe-by-default (the q151 lesson — see Lsh.preflightFullCorpus)
-    if (sliceMax.isEmpty && hotBandMax.isEmpty)
-      Lsh.preflightFullCorpus(banded, keys, Some(Lsh.DefaultPairBudget))
-    val guarded = Lsh.guardHotBuckets(banded, keys, hotBandMax)
-    val lhs = guarded.select(col("id").as("id_a"),
-      col(hashCol).as("h_a"), col("band"), col("bv"))
-    Lsh.candidateJoin(guarded, lhs, keys, "id_a", sliceMax)
-      .filter(col("id_a") < col("id"))
-      .select(col("id_a"), col("id").as("id_b"),
-        col("h_a"), col(hashCol).as("h_b"))
-      .distinct()
-      .withColumn("hamming", expr("CAST(bit_count(h_a ^ h_b) AS BIGINT)"))
+    Lsh.candidatePairs(Lsh.bitBands(hashed, hashCol, 4, 16), Seq("band", "bv"),
+        "id", "id_a", "id_b", Some(100L), carried = carried :+ hashCol)
+      .withColumn("hamming", expr(s"CAST(bit_count(${hashCol}_a ^ ${hashCol}_b) AS BIGINT)"))
       .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-      .orderBy("id_a", "id_b")
   }
 
   /** q126's media fixture: [[mediaFromDocuments]] payloads PLUS a
@@ -574,15 +550,13 @@ object Multimodal {
   }
 
   /** Audio near-duplicate pairs: [[audioHash64]] per payload, then the
-    * shared band/verify machinery ([[hammingBandPairs]]). Output
+    * shared band/verify machinery ([[hammingPairs]]). Output
     * (id_a, id_b, hamming).
     */
-  def audioNearDupPairs(
-      items: Dataset[MediaItem],
-      maxHamming: Int = 3,
-      sliceMax: Option[Long] = Some(100L),
-      hotBandMax: Option[Long] = None): DataFrame =
-    hammingBandPairs(audioHashes(items), "ahash", maxHamming, sliceMax, hotBandMax)
+  def audioNearDupPairs(items: Dataset[MediaItem], maxHamming: Int = 3): DataFrame =
+    hammingPairs(audioHashes(items), "ahash", maxHamming)
+      .select(col("id_a"), col("id_b"), col("hamming"))
+      .orderBy("id_a", "id_b")
 
   /** q134's media fixture: the corpus texts as opaque payloads PLUS a
     * deterministic near-variant of every doc_id ≡ 0 (mod 7) — first
@@ -729,42 +703,15 @@ object Multimodal {
       maxHamming: Int = 3,
       minVotes: Int = 3,
       frameBytes: Int = 64,
-      maxFrames: Int = 16,
-      sliceMax: Option[Long] = Some(100L),
-      hotBandMax: Option[Long] = None): DataFrame = {
-    require(maxHamming <= 3, "4 x 16-bit bands are pigeonhole-complete only to hamming 3")
-    // dir-aware checkpoint: the hash pass materializes ONCE for both join
-    // sides, blocks reference-tracked away, reliable under executor loss
-    // (the hammingBandPairs rationale)
-    val frames = Checkpoints.materialize(videoFrameHashes(items, frameBytes, maxFrames))
-    val banded = frames.select(
-      col("id"), col("fidx"), col("vhash"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col("vhash"), 16 * b).bitwiseAND(lit(0xffffL)).as("bv"))
-      }: _*)).as("bk"))
-      .select(col("id"), col("fidx"), col("vhash"),
-        col("bk.band").as("band"), col("bk.bv").as("bv"))
-    val keys = Seq("band", "bv")
-    // safe-by-default (the q151 lesson — see Lsh.preflightFullCorpus)
-    if (sliceMax.isEmpty && hotBandMax.isEmpty)
-      Lsh.preflightFullCorpus(banded, keys, Some(Lsh.DefaultPairBudget))
-    val guarded = Lsh.guardHotBuckets(banded, keys, hotBandMax)
-    val lhs = guarded.select(col("id").as("id_a"), col("fidx").as("fidx_a"),
-      col("vhash").as("h_a"), col("band"), col("bv"))
-    Lsh.candidateJoin(guarded, lhs, keys, "id_a", sliceMax)
-      .filter(col("id_a") < col("id"))
-      .select(col("id_a"), col("id").as("id_b"),
-        col("fidx_a"), col("fidx").as("fidx_b"),
-        col("h_a"), col("vhash").as("h_b"))
-      .distinct() // a frame pair sharing 2+ bands must count ONE vote
-      .filter(expr("bit_count(h_a ^ h_b)") <= maxHamming)
+      maxFrames: Int = 16): DataFrame =
+    // a frame pair sharing 2+ bands counts ONE vote: the pairs are distinct
+    hammingPairs(videoFrameHashes(items, frameBytes, maxFrames), "vhash", maxHamming,
+        carried = Seq("fidx"))
       .groupBy(col("id_a"), col("id_b"),
         (col("fidx_b") - col("fidx_a")).cast("long").as("foffset"))
       .agg(count(lit(1)).as("votes"))
       .filter(col("votes") >= minVotes)
       .orderBy("id_a", "id_b", "foffset")
-  }
 
   /** q136's media fixture: corpus texts as opaque "footage" PLUS a
     * deterministic TRIMMED re-encode of every doc_id ≡ 0 (mod 9) long

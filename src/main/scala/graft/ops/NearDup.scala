@@ -159,12 +159,11 @@ object NearDup {
       pairBudget: Option[Long] = Some(Lsh.DefaultPairBudget)): DataFrame = {
     val tok = tokens(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bk = bandsWith(signatures(tok), plan).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keys = Seq("band", "bkey")
-    if (sliceMax.isEmpty && hotBandMax.isEmpty)
-      Lsh.preflightFullCorpus(bk, keys, pairBudget, tok, bk)
     // wide only for the full-corpus candidate set — see [[lshNearDupPairs]]
-    verifiedJaccard(candidatesFromBands(bk, sliceMax, hotBandMax, keys), tok, tok,
-      "doc_a", "doc_b", threshold, wide = sliceMax.isEmpty)
+    verifiedJaccard(
+      Lsh.candidatePairs(bk, Seq("band", "bkey"), "doc_id", "doc_a", "doc_b", sliceMax,
+        hotCap = hotBandMax, pairBudget = pairBudget, owned = Seq(tok, bk)),
+      tok, tok, "doc_a", "doc_b", threshold, wide = sliceMax.isEmpty)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -183,8 +182,9 @@ object NearDup {
     *     matter what size estimates say); only (doc_id, band, k1, k2)
     *     fingerprints cross the wire, never text. Skewed band buckets are
     *     split across reducers by AQE's skew-join handling; `hotBandMax`
-    *     optionally drops degenerate buckets outright (see
-    *     [[Lsh.guardHotBuckets]] for the recall argument).
+    *     optionally drops degenerate buckets outright, and a call with
+    *     neither a slice nor a cap sizes itself against `pairBudget`
+    *     first ([[Lsh.candidatePairs]]).
     *
     * Cache lifetime is CALLER-OWNED: the token and band frames are
     * persisted here and read lazily by the returned plan, so a
@@ -214,13 +214,6 @@ object NearDup {
     // output instead of map-side over the 32 cached columnar partitions.
     val tok = tokens(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bk = bands(signatures(tok)).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // safe-by-default (the q151 lesson): a full-corpus call with NO hot-
-    // bucket cap sizes its own candidate space first and fails fast with
-    // the estimate instead of enumerating a quadratic blowup (bk is
-    // persisted, so the preflight's scan is reused by the join); a failed
-    // preflight releases both caches
-    if (sliceMax.isEmpty && hotBandMax.isEmpty)
-      Lsh.preflightFullCorpus(bk, BandKeys, pairBudget, tok, bk)
     // wide = MODE-derived (r19, the VERDICT's width condition): the
     // respread pays off exactly when the candidate set is corpus-scale —
     // the full-corpus self-join modes (q151's sourceDupMatrix, unsliced
@@ -230,8 +223,10 @@ object NearDup {
     // persisted tok cache, and the r18 close bench measured the extra
     // exchange at 1.2-1.4× net-negative there (q25 0.69×, q78 1.42×
     // pre-gate) — so bounded modes run wide=false, as r17 did.
-    verifiedJaccard(candidatesFromBands(bk, sliceMax, hotBandMax), tok, tok,
-      "doc_a", "doc_b", threshold, wide = sliceMax.isEmpty)
+    verifiedJaccard(
+      Lsh.candidatePairs(bk, BandKeys, "doc_id", "doc_a", "doc_b", sliceMax,
+        hotCap = hotBandMax, pairBudget = pairBudget, owned = Seq(tok, bk)),
+      tok, tok, "doc_a", "doc_b", threshold, wide = sliceMax.isEmpty)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -275,24 +270,6 @@ object NearDup {
       .filter(col("jaccard") >= threshold)
       .select((Seq(leftCol, rightCol, "jaccard") ++
         cand.columns.filterNot(Set(leftCol, rightCol))).map(col): _*)
-
-  /** Distinct candidate pairs (doc_a < doc_b) sharing ≥ 1 band bucket
-    * `keys` — the join whose physical shape FullCorpusSpec pins down:
-    * broadcast of the bounded slice when `sliceMax` is set, a hinted
-    * shuffle sort-merge self-equi-join on the band keys when it is not.
-    */
-  private[graft] def candidatesFromBands(
-      bk: DataFrame,
-      sliceMax: Option[Long],
-      hotBandMax: Option[Long],
-      keys: Seq[String] = BandKeys): DataFrame = {
-    val guarded = Lsh.guardHotBuckets(bk, keys, hotBandMax)
-    val lhs = guarded.select(col("doc_id").as("doc_a") +: keys.map(col): _*)
-    Lsh.candidateJoin(guarded, lhs, keys, "doc_a", sliceMax)
-      .filter(col("doc_a") < col("doc_id"))
-      .select(col("doc_a"), col("doc_id").as("doc_b"))
-      .distinct()
-  }
 
   /** Incremental near-dup: flag every NEW document that near-duplicates
     * the EXISTING corpus — the nightly "dedup the fresh crawl against the
@@ -719,9 +696,12 @@ object NearDup {
       // their swap, and an unpersisted lineage would run the whole
       // tokenize -> 64-min-hash -> bands pipeline once per union branch
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edges.count()
-    val cc = Clusters.connectedComponents(edges)
-    edges.unpersist(false)
+    // the labels are lineage-truncated, so the edges can go on success
+    // and must go when an action throws
+    val cc = try {
+      edges.count()
+      Clusters.connectedComponents(edges)
+    } finally edges.unpersist(false)
     val labeled = docs.select(col("doc_id"))
       .join(cc.withColumnRenamed("v", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))

@@ -78,34 +78,17 @@ object TextOps {
     * only — no token data crosses the wire after the fingerprint pass.
     * Output (doc_a, doc_b, hamming).
     *
-    * `sliceMax = Some(m)` broadcasts the bounded doc_a < m side; `None`
-    * is the full corpus × corpus shuffle self-join on (band, bv) — no
-    * broadcast, AQE splits skewed byte-bands, `hotBandMax` optionally
-    * drops degenerate ones ([[Lsh.guardHotBuckets]]).
+    * `sliceMax`, `hotBandMax` and `pairBudget` follow
+    * [[Lsh.candidatePairs]]'s slice/guard/preflight contract; a failed
+    * preflight releases the fingerprint cache.
     */
   def simhashPairs(docs: DataFrame, sliceMax: Option[Long] = Some(100L),
       maxHamming: Int = 3, hotBandMax: Option[Long] = None,
       pairBudget: Option[Long] = Some(Lsh.DefaultPairBudget)): DataFrame = {
     val fp = simhash(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = fp.select(
-      col("doc_id"), col("fp"),
-      explode(array((0 until SimHashBands).map { b =>
-        struct(lit(b).as("band"), shiftright(col("fp"), 8 * b).bitwiseAND(lit(255L)).as("bv"))
-      }: _*)).as("bk"))
-      .select(col("doc_id"), col("fp"), col("bk.band").as("band"), col("bk.bv").as("bv"))
-    val keys = Seq("band", "bv")
-    // safe-by-default (the q151 lesson — see Lsh.preflightFullCorpus);
-    // a failed preflight releases the fingerprint cache
-    if (sliceMax.isEmpty && hotBandMax.isEmpty)
-      Lsh.preflightFullCorpus(banded, keys, pairBudget, fp)
-    val guarded = Lsh.guardHotBuckets(banded, keys, hotBandMax)
-    val lhs = guarded
-      .select(col("doc_id").as("doc_a"), col("fp").as("fp_a"), col("band"), col("bv"))
-    val cand = Lsh.candidateJoin(guarded, lhs, keys, "doc_a", sliceMax)
-      .filter(col("doc_a") < col("doc_id"))
-      .select(col("doc_a"), col("doc_id").as("doc_b"), col("fp_a"), col("fp").as("fp_b"))
-      .distinct()
-    cand
+    Lsh.candidatePairs(Lsh.bitBands(fp, "fp", SimHashBands, 8), Seq("band", "bv"),
+        "doc_id", "doc_a", "doc_b", sliceMax, carried = Seq("fp"),
+        hotCap = hotBandMax, pairBudget = pairBudget, owned = Seq(fp))
       .withColumn("hamming", expr("CAST(bit_count(fp_a ^ fp_b) AS BIGINT)"))
       .filter(col("hamming") <= maxHamming)
       .select(col("doc_a"), col("doc_b"), col("hamming"))

@@ -213,7 +213,7 @@ object TrainPipe {
       else held
         .agg(graft.functions.SketchFunctions
           .bloomFilterAgg(xxhash64(col("gram")), nHeld).as("bf"))
-        .head.getAs[Array[Byte]](0)
+        .head().getAs[Array[Byte]](0)
     if (sketch == null) {
       // empty held-out set: every corpus gram is clean, no probe at all
       held.unpersist(false)

@@ -87,6 +87,27 @@ class ClustersSpec extends SparkSpec {
     }
   }
 
+  test("a failing input releases the edge cache and every round's blocks") {
+    import org.apache.spark.sql.functions._
+    // one row raises when evaluated, so an action inside the loop throws
+    // (a range, not a local Seq, which the optimizer would fold at plan time)
+    val bad = spark.range(25L).select(col("id").as("a"),
+      when(col("id") === 7L, raise_error(lit("bad edge"))).otherwise(col("id") + 1).as("b"))
+    val e = interceptReleasing("connectedComponents") {
+      Clusters.connectedComponents(bad, reliable = Some(false)).collect()
+    }
+    assert(e.getMessage.contains("bad edge") ||
+      Option(e.getCause).exists(_.getMessage.contains("bad edge")), e.toString)
+  }
+
+  test("a failing input releases lshDedupClusters' edges") {
+    import org.apache.spark.sql.functions._
+    val docs = Queries.t(spark, "/root/testdata/sf0.001", "documents")
+    val bad = docs.withColumn("text",
+      when(col("doc_id") === 3L, raise_error(lit("bad doc"))).otherwise(col("text")))
+    interceptReleasing("lshDedupClusters")(graft.ops.NearDup.lshDedupClusters(bad).collect())
+  }
+
   test("Sessions.builder wires an explicit/env checkpoint dir into spark.checkpoint.dir") {
     // In a fresh JVM SparkContext reads spark.checkpoint.dir at startup
     // and calls setCheckpointDir itself; under the suite's shared context

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{AnnLsh, NearDup, TextOps}
+import graft.ops.{AnnLsh, Lsh, NearDup, TextOps}
 
 /** The unsliced (full-corpus) similarity paths: every document/vector on
   * BOTH sides of the candidate join — dedup's real shape at 100 TB.
@@ -61,13 +61,13 @@ class FullCorpusSpec extends SparkSpec {
     // candidates-only frame: NOTHING may be broadcast — when the query set
     // is the corpus, a broadcast of the exploded band frame is driver OOM
     val bk = NearDup.bands(NearDup.signatures(NearDup.tokens(docs)))
-    assertNoBroadcast(NearDup.candidatesFromBands(bk, None, None), "minhash-candidates")
+    def cands(banded: DataFrame, keys: Seq[String], id: String, hotCap: Option[Long]) =
+      Lsh.candidatePairs(banded, keys, id, "a", "b", sliceMax = None, hotCap = hotCap)
+    assertNoBroadcast(cands(bk, NearDup.BandKeys, "doc_id", None), "minhash-candidates")
     assertNoBroadcast(
-      NearDup.candidatesFromBands(bk, None, Some(64L)), "minhash-candidates-capped")
+      cands(bk, NearDup.BandKeys, "doc_id", Some(64L)), "minhash-candidates-capped")
     assertNoBroadcast(
-      AnnLsh.candidatesFromBuckets(
-        AnnLsh.buckets(emb, 64), "vec_a", strict = true, None, None),
-      "ann-candidates")
+      cands(AnnLsh.buckets(emb, 64), AnnLsh.BucketKeys, "vec_id", None), "ann-candidates")
   }
 
   test("unsliced lshNearDupPairs restricted to the slice == sliced output") {
@@ -177,6 +177,16 @@ class FullCorpusSpec extends SparkSpec {
     assert(NearDup.lshNearDupPairs(hot, sliceMax = None, pairBudget = None).count() > 0)
     assert(NearDup.lshNearDupPairs(hot, sliceMax = Some(5L),
       pairBudget = Some(1000L)).count() > 0)
+  }
+
+  test("preflight: unbounded annTopK over budget fails fast and releases its caches") {
+    // 2,501 identical vectors share one bucket in each of the 16 tables:
+    // 16 x C(2501, 2) = 50,020,000 raw pairs, just over the 50M default
+    val hotEmb = spark.range(2501L).select(col("id").as("vec_id"))
+      .crossJoin(emb.select("embedding").limit(1))
+    val e = interceptReleasing("annTopK")(AnnLsh.annTopK(hotEmb, queryMax = None))
+    assert(e.getMessage.contains("50020000"), s"estimate absent: ${e.getMessage}")
+    assert(e.getMessage.contains(s"budget ${Lsh.DefaultPairBudget}"), e.getMessage)
   }
 
   test("preflight: the sf corpus passes the default budget on every family") {

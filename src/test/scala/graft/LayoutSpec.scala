@@ -36,7 +36,7 @@ class LayoutSpec extends SparkSpec {
     val orders = Queries.t(spark, "/root/testdata/sf0.001", "orders")
     Layout.writeRangeSorted(orders, dir.toString, "o_orderkey", numFiles = 6)
 
-    val key = orders.agg(max("o_orderkey")).head.getLong(0) / 2
+    val key = orders.agg(max("o_orderkey")).head().getLong(0) / 2
     val probe = spark.read.parquet(dir.toString)
       .filter(col("o_orderkey") === key)
     val plan = probe.queryExecution.executedPlan.toString
@@ -66,7 +66,7 @@ class LayoutSpec extends SparkSpec {
   test("z-ordered write bounds BOTH keys per file; single-key sort bounds only its own") {
     val li = Queries.t(spark, "/root/testdata/sf0.001", "lineitem")
     def spans(path: String, key: String): Seq[Double] = {
-      val global = li.agg(max(col(key)) - min(col(key))).head.getLong(0).toDouble
+      val global = li.agg(max(col(key)) - min(col(key))).head().getLong(0).toDouble
       Layout.fileRanges(spark, path, key).collect()
         .map(r => (r.getLong(2) - r.getLong(1)) / global).toSeq
     }

@@ -253,7 +253,7 @@ class MinHashLshSpec extends SparkSpec {
       .select(explode(col("toks"))).count()
     val nPrefix = tok.filter(col("doc_id") < 100)
       .select(col("doc_id"), (floor(size(col("toks")) * 0.2) + 1).as("k"))
-      .agg(sum("k")).head.getLong(0)
+      .agg(sum("k")).head().getLong(0)
     assert(nPrefix < nAll / 2, s"prefix $nPrefix vs full $nAll: pruning is not real")
   }
 

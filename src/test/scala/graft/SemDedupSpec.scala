@@ -68,7 +68,7 @@ class SemDedupSpec extends SparkSpec {
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
       if c >= 0.3
     } yield (a, b)
-    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+    val parent = scala.collection.mutable.Map(ids.toIndexedSeq.map(i => i -> i): _*)
     def find(x: Long): Long = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
     pairs.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))

@@ -14,6 +14,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.afterAll()
   }
 
+  /** Runs `body`, which must throw, starting from an empty CacheManager,
+    * and checks that the failure left no frame cached and no RDD
+    * persisted that was not persisted before the call.
+    */
+  def interceptReleasing(label: String)(body: => Any): Exception = {
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keys.toSet
+    val e = intercept[Exception](body)
+    assert(spark.sharedState.cacheManager.isEmpty, s"$label: a failure left a frame cached")
+    val leaked = spark.sparkContext.getPersistentRDDs.keys.toSet -- before
+    assert(leaked.isEmpty, s"$label: a failure left RDDs $leaked persisted")
+    e
+  }
+
   def tmpDir(prefix: String): java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     p.toFile.deleteOnExit()

@@ -113,10 +113,10 @@ class TextExprsSpec extends SparkSpec {
 
   test("SQL name rolling_fingerprint resolves through GraftExtensions") {
     val viaSql = spark.sql("SELECT rolling_fingerprint('hello world') AS fp")
-      .head.getLong(0)
+      .head().getLong(0)
     val viaCol = spark.range(1).select(
       rollingFingerprint(lit("hello world"), FingerprintK, FingerprintB, FingerprintP)
-        .as("fp")).head.getLong(0)
+        .as("fp")).head().getLong(0)
     assert(viaSql === viaCol)
   }
 }

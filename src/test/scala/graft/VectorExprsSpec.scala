@@ -113,7 +113,7 @@ class VectorExprsSpec extends SparkSpec {
   test("SQL name vec_dot resolves through GraftExtensions registration") {
     val r = spark.sql(
       "SELECT vec_dot(array(CAST(1.5 AS FLOAT), CAST(2.0 AS FLOAT)), " +
-        "array(CAST(2.0 AS FLOAT), CAST(3.0 AS FLOAT))) AS d").head.getDouble(0)
+        "array(CAST(2.0 AS FLOAT), CAST(3.0 AS FLOAT))) AS d").head().getDouble(0)
     assert(r === 9.0)
   }
 

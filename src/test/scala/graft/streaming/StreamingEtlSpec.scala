@@ -1037,7 +1037,7 @@ class StreamingEtlSpec extends SparkSpec {
     val sketch = held
       .agg(graft.functions.SketchFunctions
         .bloomFilterAgg(xxhash64(col("gram")), 2L).as("bf"))
-      .head.getAs[Array[Byte]](0)
+      .head().getAs[Array[Byte]](0)
     val rows =
       """{"doc_id":1,"text":"the quick brown fox jumps over dogs","lang":"fr","source":"s0"}
         |{"doc_id":2,"text":"x alpha beta gamma tail","lang":"fr","source":"s0"}
