@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -344,45 +344,36 @@ object AnnPq {
     val cents = AnnIvf.initCentroids(clean, nlist)
     require(cb.nonEmpty && cents.nonEmpty,
       "pq index needs a non-empty quantizer (corpus had no valid vectors)")
-    require(StoreManifest.currentSnapshot(spark, dir).isEmpty,
-      s"pq index $dir already exists — append or compact instead")
-    cents.toDF("cid", "centroid")
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/${StoreManifest.componentDir("centroids", 1L)}")
-    cb.zipWithIndex.flatMap { case (cbj, j) =>
-      cbj.zipWithIndex.map { case (c, r) => (j, r, c) }
-    }.toDF("j", "r", "c")
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/${StoreManifest.componentDir("codebook", 1L)}")
-    codeTableOf(clean, cb, cents, subDim)
-      .write.partitionBy("list_id")
-      .mode(SaveMode.Overwrite)
-      .parquet(s"$dir/${StoreManifest.componentDir("codes", 1L)}")
-    StoreManifest.publish(spark, dir, StoreManifest.Snapshot(1L, -1L, Map(
-      "centroids" -> Seq(StoreManifest.componentDir("centroids", 1L)),
-      "codebook" -> Seq(StoreManifest.componentDir("codebook", 1L)),
-      "codes" -> Seq(StoreManifest.componentDir("codes", 1L)))))
+    PqStore.at(spark, dir).create { w =>
+      w("centroids", cents.toDF("cid", "centroid"))
+      w("codebook", cb.zipWithIndex.flatMap { case (cbj, j) =>
+        cbj.zipWithIndex.map { case (c, r) => (j, r, c) }
+      }.toDF("j", "r", "c"))
+      w("codes", codeTableOf(clean, cb, cents, subDim))
+    }
   }
 
-  private val CodesSchema = "vec_id LONG, codes ARRAY<INT>, list_id LONG"
-
-  private def indexSnapshot(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      asOfVersion: Option[Long] = None): StoreManifest.Snapshot =
-    asOfVersion
-      .map(v => StoreManifest.snapshotAt(spark, dir, v))
-      .orElse(StoreManifest.currentSnapshot(spark, dir))
-      .getOrElse(sys.error(s"pq index $dir does not exist"))
+  /** The PQ index: quantizers (centroids, codebook) and the code table,
+    * partitioned by cell. `list_id` is a directory partition column:
+    * inference would type it INT, silently casting the probe's join key
+    * (the [[SemDedup]] store discipline).
+    */
+  private[ops] val PqStore = StoreManifest.Kind("pq index", Map(
+    "centroids" -> "cid LONG, centroid ARRAY<FLOAT>",
+    "codebook" -> "j INT, r INT, c ARRAY<DOUBLE>",
+    "codes" -> "vec_id LONG, codes ARRAY<INT>, list_id LONG",
+    "tombstones" -> "vec_id LONG"),
+    partitionBy = Map("codes" -> "list_id"))
 
   /** Stored quantizers: (codebook, centroids) — bounded collects. */
-  private def readQuantizers(spark: org.apache.spark.sql.SparkSession,
-      dir: String, snap: StoreManifest.Snapshot): (Seq[Seq[Seq[Double]]], Seq[(Long, Array[Float])]) = {
-    val cb = StoreManifest.readComponent(spark, dir, snap, "codebook").get
+  private def readQuantizers(store: StoreManifest.Store, snap: StoreManifest.Snapshot)
+      : (Seq[Seq[Seq[Double]]], Seq[(Long, Array[Float])]) = {
+    val cb = store.read(snap, "codebook")
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3).toIndexedSeq)
-    val cents = StoreManifest.readComponent(spark, dir, snap, "centroids").get
+    val cents = store.read(snap, "centroids")
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
       .toIndexedSeq.sortBy(_._1)
@@ -399,20 +390,13 @@ object AnnPq {
     */
   def appendPqIndex(delta: DataFrame, dir: String,
       m: Int = M, subDim: Int = SubDim, batchId: Long = -1L): Unit = {
-    val spark = delta.sparkSession
-    val cur = indexSnapshot(spark, dir)
-    if (batchId >= 0 && batchId <= cur.batchWatermark) return // replay — already folded
-    val (cb, cents) = readQuantizers(spark, dir, cur)
-    val clean = delta.filter(col("embedding").isNotNull &&
-      size(col("embedding")) === m * subDim)
-    val v = cur.version + 1
-    codeTableOf(clean, cb, cents, subDim)
-      .write.partitionBy("list_id")
-      .mode(SaveMode.Overwrite)
-      .parquet(s"$dir/${StoreManifest.componentDir("codes", v)}")
-    StoreManifest.publish(spark, dir, cur
-      .appending("codes", StoreManifest.componentDir("codes", v))
-      .copy(version = v, batchWatermark = math.max(cur.batchWatermark, batchId)))
+    val store = PqStore.at(delta.sparkSession, dir)
+    store.append(batchId) { (cur, w) =>
+      val (cb, cents) = readQuantizers(store, cur)
+      val clean = delta.filter(col("embedding").isNotNull &&
+        size(col("embedding")) === m * subDim)
+      w("codes", codeTableOf(clean, cb, cents, subDim))
+    }
   }
 
   /** Tombstone deleted vectors — O(|deleted|), no code file touched
@@ -423,23 +407,8 @@ object AnnPq {
     * codebook/centroids are static once trained; drift is a periodic
     * full rebuild, not a delete-path concern).
     */
-  def deleteFromPqIndex(deletedIds: DataFrame, dir: String): Unit = {
-    val spark = deletedIds.sparkSession
-    val cur = indexSnapshot(spark, dir)
-    val v = cur.version + 1
-    deletedIds.select(col("vec_id"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/${StoreManifest.componentDir("tombstones", v)}")
-    StoreManifest.publish(spark, dir, cur
-      .appending("tombstones", StoreManifest.componentDir("tombstones", v))
-      .copy(version = v))
-  }
-
-  private def indexTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      snap: StoreManifest.Snapshot): Option[DataFrame] =
-    StoreManifest.readComponent(spark, dir, snap, "tombstones")
+  def deleteFromPqIndex(deletedIds: DataFrame, dir: String): Unit =
+    PqStore.at(deletedIds.sparkSession, dir).tombstone(deletedIds)
 
   /** Fold the tombstones into the code table: rewrite codes minus
     * tombstoned vectors (list_id partitioning preserved — the
@@ -454,20 +423,9 @@ object AnnPq {
     */
   def compactPqIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val cur = indexSnapshot(spark, dir)
-    indexTombstones(spark, dir, cur).foreach { tomb =>
-      val v = cur.version + 1
-      StoreManifest.readComponent(spark, dir, cur, "codes", Some(CodesSchema)).get
-        .join(broadcast(tomb.select("vec_id")), Seq("vec_id"), "left_anti")
-        .write.partitionBy("list_id")
-        .mode(SaveMode.Overwrite)
-        .parquet(s"$dir/${StoreManifest.componentDir("codes", v)}")
-      StoreManifest.publish(spark, dir, StoreManifest.Snapshot(
-        v, cur.batchWatermark, Map(
-          "centroids" -> cur.components("centroids"),
-          "codebook" -> cur.components("codebook"),
-          "codes" -> Seq(StoreManifest.componentDir("codes", v)))))
-    }
+    val store = PqStore.at(spark, dir)
+    val cur = store.snapshot()
+    if (store.tombstoned(cur)) store.compact(cur)(_("codes", store.live(cur, "codes")))
   }
 
   /** [[ivfPqTopK]] served from the store: the code table streams from
@@ -490,13 +448,10 @@ object AnnPq {
       shortlist: Int = Shortlist,
       topK: Int = TopK,
       asOfVersion: Option[Long] = None): DataFrame = {
-    val spark = emb.sparkSession
-    val snap = indexSnapshot(spark, dir, asOfVersion)
-    val (cb, cents) = readQuantizers(spark, dir, snap)
-    val stored = StoreManifest
-      .readComponent(spark, dir, snap, "codes", Some(CodesSchema)).get
-    val codeTable = indexTombstones(spark, dir, snap).fold(stored)(t =>
-      stored.join(broadcast(t.select("vec_id")), Seq("vec_id"), "left_anti"))
+    val store = PqStore.at(emb.sparkSession, dir)
+    val snap = store.snapshot(asOfVersion)
+    val (cb, cents) = readQuantizers(store, snap)
+    val codeTable = store.live(snap, "codes")
     val clean = Spread.widen(emb.filter(col("embedding").isNotNull &&
       size(col("embedding")) === m * subDim), col("vec_id"))
     searchIvfPq(codeTable, clean, cb, cents,

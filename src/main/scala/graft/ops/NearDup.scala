@@ -465,47 +465,22 @@ object NearDup {
     * Both writes happen in-call (eager), so the token cache is dropped
     * before returning — no caller-owned lifetime here.
     */
-  def writeSignatureStore(docs: DataFrame, path: String): Unit = {
-    val spark = docs.sparkSession
-    require(StoreManifest.currentSnapshot(spark, path).isEmpty,
-      s"signature store $path already exists — append or compact instead")
-    writeSignatureBatch(docs, path, 1L)
-    StoreManifest.publish(spark, path, StoreManifest.Snapshot(1L, -1L, Map(
-      "tokens" -> Seq(StoreManifest.componentDir("tokens", 1L)),
-      "bands" -> Seq(StoreManifest.componentDir("bands", 1L)))))
-  }
+  def writeSignatureStore(docs: DataFrame, path: String): Unit =
+    SignatureStore.at(docs.sparkSession, path).create(writeSignatureBatch(docs, _))
 
-  /** Reader schemas of the stored tokens and bands, as [[tokens]] and
-    * [[bands]] write them: an explicit schema spares parquet one
-    * schema-inference job per data dir read, and a probed store gains
-    * two dirs per appended batch (the Retrieval/AnnPq store discipline).
+  /** The signature store: token sets and band keys per doc, as [[tokens]]
+    * and [[bands]] write them.
     */
-  private val StoreSchemas = Map(
+  private[graft] val SignatureStore = StoreManifest.Kind("signature store", Map(
     "tokens" -> "doc_id LONG, toks ARRAY<STRING>",
-    "bands" -> "doc_id LONG, band INT, k1 LONG, k2 LONG")
+    "bands" -> "doc_id LONG, band INT, k1 LONG, k2 LONG",
+    "tombstones" -> "doc_id LONG"))
 
-  private def storeComponent(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      snap: StoreManifest.Snapshot,
-      name: String): Option[DataFrame] =
-    StoreManifest.readComponent(spark, path, snap, name, StoreSchemas.get(name))
-
-  /** One batch's tokens/bands data dirs for snapshot `v` (immutable
-    * once the manifest referencing them publishes).
-    */
-  private def writeSignatureBatch(docs: DataFrame, path: String, v: Long): Unit = {
+  /** One batch's tokens/bands data dirs. */
+  private def writeSignatureBatch(docs: DataFrame, w: StoreManifest.Writer): Unit = {
     val tok = tokens(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try writeSignedBatch(tok, bands(signatures(tok)), path, v)
+    try { w("tokens", tok); w("bands", bands(signatures(tok))) }
     finally tok.unpersist(false)
-  }
-
-  /** [[writeSignatureBatch]] for a batch that is already signed. */
-  private def writeSignedBatch(tok: DataFrame, bk: DataFrame, path: String, v: Long): Unit = {
-    tok.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/${StoreManifest.componentDir("tokens", v)}")
-    bk.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/${StoreManifest.componentDir("bands", v)}")
   }
 
   /** Append one delta batch's token sets + band keys to the store — the
@@ -519,7 +494,8 @@ object NearDup {
     */
   def appendSignatureStore(
       delta: DataFrame, path: String, batchId: Long = -1L): Unit =
-    appendToStore(delta.sparkSession, path, batchId)(writeSignatureBatch(delta, path, _))
+    SignatureStore.at(delta.sparkSession, path).append(batchId)((_, w) =>
+      writeSignatureBatch(delta, w))
 
   /** [[appendSignatureStore]] for a batch that is already signed: `tok`
     * ([[tokens]]) and `bk` ([[bands]]) are written as they are, so
@@ -528,42 +504,17 @@ object NearDup {
     */
   private[graft] def appendSignedBatch(
       tok: DataFrame, bk: DataFrame, path: String, batchId: Long): Unit =
-    appendToStore(tok.sparkSession, path, batchId)(writeSignedBatch(tok, bk, path, _))
-
-  /** The append protocol: check the watermark, write the data dirs of
-    * the next version, then publish them in one manifest.
-    */
-  private def appendToStore(
-      spark: org.apache.spark.sql.SparkSession, path: String, batchId: Long)(
-      write: Long => Unit): Unit = {
-    val cur = StoreManifest.currentSnapshot(spark, path)
-      .getOrElse(sys.error(s"signature store $path does not exist — write it first"))
-    if (batchId >= 0 && batchId <= cur.batchWatermark) return // replay — already folded
-    val v = cur.version + 1
-    write(v)
-    StoreManifest.publish(spark, path, cur
-      .appending("tokens", StoreManifest.componentDir("tokens", v))
-      .appending("bands", StoreManifest.componentDir("bands", v))
-      .copy(version = v, batchWatermark = math.max(cur.batchWatermark, batchId)))
-  }
+    SignatureStore.at(tok.sparkSession, path).append(batchId) { (_, w) =>
+      w("tokens", tok); w("bands", bk)
+    }
 
   /** Tombstone deleted docs — O(|deleted|), no store file touched (the
     * [[graft.ops.Retrieval.deleteFromPostingsStore]] lifecycle): probes
     * anti-join the tombstones, so a deleted doc stops matching (and
     * stops witnessing candidates) the moment the tombstone publishes.
     */
-  def deleteFromSignatureStore(deletedIds: DataFrame, path: String): Unit = {
-    val spark = deletedIds.sparkSession
-    val cur = StoreManifest.currentSnapshot(spark, path)
-      .getOrElse(sys.error(s"signature store $path does not exist"))
-    val v = cur.version + 1
-    deletedIds.select(col("doc_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/${StoreManifest.componentDir("tombstones", v)}")
-    StoreManifest.publish(spark, path, cur
-      .appending("tombstones", StoreManifest.componentDir("tombstones", v))
-      .copy(version = v))
-  }
+  def deleteFromSignatureStore(deletedIds: DataFrame, path: String): Unit =
+    SignatureStore.at(deletedIds.sparkSession, path).tombstone(deletedIds)
 
   /** Fold the tombstones into the store files: rewrite tokens/bands
     * minus tombstoned docs into fresh data dirs, publish a manifest
@@ -576,22 +527,10 @@ object NearDup {
     */
   def compactSignatureStore(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val cur = StoreManifest.currentSnapshot(spark, path)
-      .getOrElse(sys.error(s"signature store $path does not exist"))
-    storeComponent(spark, path, cur, "tombstones").foreach { tomb =>
-      val t = broadcast(tomb.select("doc_id"))
-      val v = cur.version + 1
-      Seq("tokens", "bands").foreach { name =>
-        storeComponent(spark, path, cur, name).get
-          .join(t, Seq("doc_id"), "left_anti")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/${StoreManifest.componentDir(name, v)}")
-      }
-      StoreManifest.publish(spark, path, StoreManifest.Snapshot(
-        v, cur.batchWatermark, Map(
-          "tokens" -> Seq(StoreManifest.componentDir("tokens", v)),
-          "bands" -> Seq(StoreManifest.componentDir("bands", v)))))
-    }
+    val store = SignatureStore.at(spark, path)
+    val cur = store.snapshot()
+    if (store.tombstoned(cur))
+      store.compact(cur)(w => Seq("tokens", "bands").foreach(n => w(n, store.live(cur, n))))
   }
 
   /** [[incrementalNearDupPairs]] against a MATERIALIZED base: the delta
@@ -615,11 +554,7 @@ object NearDup {
       delta: DataFrame,
       threshold: Double = 0.5,
       asOfVersion: Option[Long] = None): DataFrame = {
-    val spark = delta.sparkSession
-    val snap = asOfVersion
-      .map(v => StoreManifest.snapshotAt(spark, storePath, v))
-      .orElse(StoreManifest.currentSnapshot(spark, storePath))
-      .getOrElse(sys.error(s"signature store $storePath does not exist"))
+    val snap = SignatureStore.at(delta.sparkSession, storePath).snapshot(asOfVersion)
     val deltaTok = tokens(delta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     probeSignatureStore(storePath, snap, deltaTok, bands(signatures(deltaTok)), threshold,
@@ -643,13 +578,9 @@ object NearDup {
       bk: DataFrame,
       threshold: Double,
       withinBatch: Boolean): DataFrame = {
-    val spark = tok.sparkSession
-    def live(df: DataFrame): DataFrame =
-      storeComponent(spark, storePath, snap, "tombstones").fold(df)(t =>
-        df.join(broadcast(t.select("doc_id")), Seq("doc_id"), "left_anti"))
-    val storeTok = live(storeComponent(spark, storePath, snap, "tokens").get)
-    val storeBk = live(storeComponent(spark, storePath, snap, "bands").get)
-      .withColumn("origin", lit("store"))
+    val store = SignatureStore.at(tok.sparkSession, storePath)
+    val storeTok = store.live(snap, "tokens")
+    val storeBk = store.live(snap, "bands").withColumn("origin", lit("store"))
     val otherTok = if (withinBatch) storeTok.unionByName(tok) else storeTok
     val otherBk =
       if (withinBatch) storeBk.unionByName(bk.withColumn("origin", lit("batch"))) else storeBk

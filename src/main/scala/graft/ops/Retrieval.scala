@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -199,33 +199,27 @@ object Retrieval {
         size(expr("filter(split(text, ' '), x -> x <> '')"))
           .cast("long").as("dl"))
 
-  private val PostingsSchema = "tok STRING, doc_id LONG, tf LONG, dl LONG, bucket INT"
-
-  /** Write one batch's three data dirs for snapshot `v` (immutable once
-    * the manifest referencing them publishes).
+  /** The postings store: bucket-partitioned postings, per-write stats
+    * partials and the doclens forward index.
     */
+  private[ops] val PostingsStore = StoreManifest.Kind("postings store", Map(
+    "postings" -> "tok STRING, doc_id LONG, tf LONG, dl LONG, bucket INT",
+    "stats" -> "n_docs LONG, sum_dl LONG",
+    "doclens" -> "doc_id LONG, dl LONG",
+    "tombstones" -> "doc_id LONG"),
+    partitionBy = Map("postings" -> "bucket"))
+
+  /** Write one batch's three data dirs. */
   private def writeBatchDirs(
-      docs: DataFrame, dir: String, v: Long, nBuckets: Int): Unit = {
-    postingsOf(docs, nBuckets)
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"$dir/${StoreManifest.componentDir("postings", v)}")
-    statsOf(docs).write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/${StoreManifest.componentDir("stats", v)}")
-    doclensOf(docs).write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/${StoreManifest.componentDir("doclens", v)}")
+      docs: DataFrame, nBuckets: Int, w: StoreManifest.Writer): Unit = {
+    w("postings", postingsOf(docs, nBuckets))
+    w("stats", statsOf(docs))
+    w("doclens", doclensOf(docs))
   }
 
   /** Build the index from the base corpus: data dirs + manifest v1. */
-  def writePostingsStore(docs: DataFrame, dir: String, nBuckets: Int = 64): Unit = {
-    val spark = docs.sparkSession
-    require(StoreManifest.currentSnapshot(spark, dir).isEmpty,
-      s"postings store $dir already exists — append or compact instead")
-    writeBatchDirs(docs, dir, 1L, nBuckets)
-    StoreManifest.publish(spark, dir, StoreManifest.Snapshot(1L, -1L, Map(
-      "postings" -> Seq(StoreManifest.componentDir("postings", 1L)),
-      "stats" -> Seq(StoreManifest.componentDir("stats", 1L)),
-      "doclens" -> Seq(StoreManifest.componentDir("doclens", 1L)))))
-  }
+  def writePostingsStore(docs: DataFrame, dir: String, nBuckets: Int = 64): Unit =
+    PostingsStore.at(docs.sparkSession, dir).create(writeBatchDirs(docs, nBuckets, _))
 
   /** Append one delta batch (fresh doc_ids — the store contract): three
     * new data dirs, ONE manifest publish — a crash before the publish
@@ -238,19 +232,9 @@ object Retrieval {
     */
   def appendPostingsStore(
       delta: DataFrame, dir: String, nBuckets: Int = 64,
-      batchId: Long = -1L): Unit = {
-    val spark = delta.sparkSession
-    val cur = StoreManifest.currentSnapshot(spark, dir)
-      .getOrElse(sys.error(s"postings store $dir does not exist — write it first"))
-    if (batchId >= 0 && batchId <= cur.batchWatermark) return // replay — already folded
-    val v = cur.version + 1
-    writeBatchDirs(delta, dir, v, nBuckets)
-    StoreManifest.publish(spark, dir, cur
-      .appending("postings", StoreManifest.componentDir("postings", v))
-      .appending("stats", StoreManifest.componentDir("stats", v))
-      .appending("doclens", StoreManifest.componentDir("doclens", v))
-      .copy(version = v, batchWatermark = math.max(cur.batchWatermark, batchId)))
-  }
+      batchId: Long = -1L): Unit =
+    PostingsStore.at(delta.sparkSession, dir).append(batchId)((_, w) =>
+      writeBatchDirs(delta, nBuckets, w))
 
   /** Tombstone deleted docs — O(|deleted|), no postings dir touched
     * (the lakehouse delete shape): validated ids land in a new
@@ -271,42 +255,24 @@ object Retrieval {
     * nothing.
     */
   def deleteFromPostingsStore(deletedIds: DataFrame, dir: String): Unit = {
-    val spark = deletedIds.sparkSession
-    val cur = StoreManifest.currentSnapshot(spark, dir)
-      .getOrElse(sys.error(s"postings store $dir does not exist"))
-    val doclens = StoreManifest.readComponent(spark, dir, cur, "doclens")
-      .getOrElse(sys.error(s"postings store $dir has no doclens component"))
-    val live = StoreManifest.readComponent(spark, dir, cur, "tombstones")
-      .fold(doclens)(t =>
-        doclens.join(broadcast(t.select("doc_id")), Seq("doc_id"), "left_anti"))
-    val valid = live
-      .join(broadcast(deletedIds.select("doc_id").distinct()), Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val agg = valid
-        .agg(count(lit(1)).as("n_docs"), coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-        .collect()(0)
-      if (agg.getLong(0) > 0) {
-        val v = cur.version + 1
-        valid.select("doc_id").write.mode(SaveMode.Overwrite)
-          .parquet(s"$dir/${StoreManifest.componentDir("tombstones", v)}")
-        valid
-          .agg((-count(lit(1))).as("n_docs"),
-            (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$dir/${StoreManifest.componentDir("stats", v)}")
-        StoreManifest.publish(spark, dir, cur
-          .appending("tombstones", StoreManifest.componentDir("tombstones", v))
-          .appending("stats", StoreManifest.componentDir("stats", v))
-          .copy(version = v))
-      }
-    } finally valid.unpersist(false)
+    val store = PostingsStore.at(deletedIds.sparkSession, dir)
+    store.append() { (cur, w) =>
+      val valid = store.live(cur, "doclens")
+        .join(broadcast(deletedIds.select("doc_id").distinct()), Seq("doc_id"), "left_semi")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val agg = valid
+          .agg(count(lit(1)).as("n_docs"), coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
+          .collect()(0)
+        if (agg.getLong(0) > 0) {
+          w("tombstones", valid.select("doc_id"))
+          w("stats", valid
+            .agg((-count(lit(1))).as("n_docs"),
+              (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl")))
+        }
+      } finally valid.unpersist(false)
+    }
   }
-
-  private def tombstonesOf(
-      spark: SparkSession, dir: String,
-      snap: StoreManifest.Snapshot): Option[DataFrame] =
-    StoreManifest.readComponent(spark, dir, snap, "tombstones")
 
   /** Fold the tombstones into the files: rewrite postings/doclens minus
     * tombstoned docs (bucket partitioning preserved — the pruning
@@ -322,32 +288,14 @@ object Retrieval {
     * `asOfVersion` until [[StoreManifest.vacuum]].
     */
   def compactPostingsStore(spark: SparkSession, dir: String): Unit = {
-    val cur = StoreManifest.currentSnapshot(spark, dir)
-      .getOrElse(sys.error(s"postings store $dir does not exist"))
-    val v = cur.version + 1
-    val tomb = tombstonesOf(spark, dir, cur)
-    def live(df: DataFrame): DataFrame = tomb.fold(df)(t =>
-      df.join(broadcast(t.select("doc_id")), Seq("doc_id"), "left_anti"))
-    val postings = StoreManifest
-      .readComponent(spark, dir, cur, "postings", Some(PostingsSchema)).get
-    live(postings)
-      // canonical column order: the key join moved doc_id first, and the
-      // compacted schema must equal a from-scratch build's
-      .select("tok", "doc_id", "tf", "dl", "bucket")
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"$dir/${StoreManifest.componentDir("postings", v)}")
-    StoreManifest.readComponent(spark, dir, cur, "stats").get
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/${StoreManifest.componentDir("stats", v)}")
-    live(StoreManifest.readComponent(spark, dir, cur, "doclens").get)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/${StoreManifest.componentDir("doclens", v)}")
-    StoreManifest.publish(spark, dir, StoreManifest.Snapshot(
-      v, cur.batchWatermark, Map(
-        "postings" -> Seq(StoreManifest.componentDir("postings", v)),
-        "stats" -> Seq(StoreManifest.componentDir("stats", v)),
-        "doclens" -> Seq(StoreManifest.componentDir("doclens", v)))))
+    val store = PostingsStore.at(spark, dir)
+    val cur = store.snapshot()
+    store.compact(cur) { w =>
+      w("postings", store.live(cur, "postings"))
+      w("stats", store.read(cur, "stats")
+        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl")))
+      w("doclens", store.live(cur, "doclens"))
+    }
   }
 
   /** [[bm25TopK]] served from the store: same arithmetic, but the scan
@@ -372,10 +320,8 @@ object Retrieval {
       asOfVersion: Option[Long] = None): DataFrame = {
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty))
     import spark.implicits._
-    val snap = asOfVersion
-      .map(v => StoreManifest.snapshotAt(spark, dir, v))
-      .orElse(StoreManifest.currentSnapshot(spark, dir))
-      .getOrElse(sys.error(s"postings store $dir does not exist"))
+    val store = PostingsStore.at(spark, dir)
+    val snap = store.snapshot(asOfVersion)
     val terms = queries.flatMap(_._2).distinct
     val termBuckets = terms.map { t =>
       val c = new java.util.zip.CRC32()
@@ -388,14 +334,11 @@ object Retrieval {
 
     // partition-pruned: only the query terms' buckets are listed/read;
     // tombstoned docs filtered BEFORE df so term rarity is live-corpus
-    val pruned = StoreManifest
-      .readComponent(spark, dir, snap, "postings", Some(PostingsSchema)).get
+    val matched = store.live(snap, "postings")
       .filter(col("bucket").isin(termBuckets.map(Int.box): _*))
       .join(broadcast(qterms), "tok")
-    val matched = tombstonesOf(spark, dir, snap).fold(pruned)(t =>
-      pruned.join(broadcast(t.select("doc_id")), Seq("doc_id"), "left_anti"))
 
-    val scalars = StoreManifest.readComponent(spark, dir, snap, "stats").get
+    val scalars = store.read(snap, "stats")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
 
     // df over the pruned slice = global df of each query term (postings
@@ -529,22 +472,17 @@ object Retrieval {
       queries: Seq[(Long, Seq[String], Seq[String])] = DefaultBoolQueries,
       nBuckets: Int = 64,
       asOfVersion: Option[Long] = None): DataFrame = {
-    val snap = asOfVersion
-      .map(v => StoreManifest.snapshotAt(spark, dir, v))
-      .orElse(StoreManifest.currentSnapshot(spark, dir))
-      .getOrElse(sys.error(s"postings store $dir does not exist"))
+    val store = PostingsStore.at(spark, dir)
+    val snap = store.snapshot(asOfVersion)
     val terms = queries.flatMap { case (_, m, n) => m ++ n }.distinct
     val termBuckets = terms.map { t =>
       val c = new java.util.zip.CRC32()
       c.update(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       (c.getValue % nBuckets).toInt
     }.distinct
-    val pruned = StoreManifest
-      .readComponent(spark, dir, snap, "postings", Some(PostingsSchema)).get
+    val live = store.live(snap, "postings")
       .filter(col("bucket").isin(termBuckets.map(Int.box): _*))
       .filter(col("tok").isin(terms: _*))
-    val live = tombstonesOf(spark, dir, snap).fold(pruned)(t =>
-      pruned.join(broadcast(t.select("doc_id")), Seq("doc_id"), "left_anti"))
     booleanEval(live.select("doc_id", "tok"), queries)
   }
 

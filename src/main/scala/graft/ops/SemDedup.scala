@@ -250,35 +250,31 @@ object SemDedup {
       else AnnIvf.initCentroids(emb, nlist)
     require(cents.nonEmpty,
       "semantic store needs a non-empty quantizer (corpus had no valid vectors)")
-    require(StoreManifest.currentSnapshot(spark, path).isEmpty,
-      s"semantic store $path already exists — delete or compact instead")
     import spark.implicits._
-    cents.toDF("cid", "centroid").write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/${StoreManifest.componentDir("centroids", 1L)}")
-    val assigned = assignFrame(emb, cents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      assigned.write.partitionBy("list_id")
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/${StoreManifest.componentDir("assigned", 1L)}")
-      cellPairs(assigned, threshold, nlist).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/${StoreManifest.componentDir("edges", 1L)}")
-    } finally assigned.unpersist(false)
-    StoreManifest.publish(spark, path, StoreManifest.Snapshot(1L, -1L, Map(
-      "centroids" -> Seq(StoreManifest.componentDir("centroids", 1L)),
-      "assigned" -> Seq(StoreManifest.componentDir("assigned", 1L)),
-      "edges" -> Seq(StoreManifest.componentDir("edges", 1L)))))
+    SemanticStore.at(spark, path).create { w =>
+      w("centroids", cents.toDF("cid", "centroid"))
+      val assigned = assignFrame(emb, cents)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        w("assigned", assigned)
+        w("edges", cellPairs(assigned, threshold, nlist))
+      } finally assigned.unpersist(false)
+    }
   }
 
-  private def storeSnapshot(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      asOfVersion: Option[Long] = None): StoreManifest.Snapshot =
-    asOfVersion
-      .map(v => StoreManifest.snapshotAt(spark, path, v))
-      .orElse(StoreManifest.currentSnapshot(spark, path))
-      .getOrElse(sys.error(s"semantic store $path does not exist"))
+  /** The semantic store: the quantizer centroids, the cell-partitioned
+    * assigned vectors and the within-cell dup edges (a, b). `assigned`
+    * is read with its declared schema: `list_id` is a directory-name
+    * partition column, and inference would type it INT — silently
+    * casting the probe's join key (killing dynamic partition pruning)
+    * and mistyping the merged output.
+    */
+  private[ops] val SemanticStore = StoreManifest.Kind("semantic store", Map(
+    "centroids" -> "cid LONG, centroid ARRAY<FLOAT>",
+    "assigned" -> "vec_id LONG, embedding ARRAY<FLOAT>, nrm DOUBLE, list_id LONG",
+    "edges" -> "a LONG, b LONG",
+    "tombstones" -> "vec_id LONG"),
+    partitionBy = Map("assigned" -> "list_id"))
 
   /** Fold one delta batch into the store (fresh vec_ids — the store
     * contract): assign against the STORED centroids (never retrained),
@@ -295,56 +291,28 @@ object SemDedup {
   def appendSemanticStore(
       delta: DataFrame, path: String,
       threshold: Double = 0.3, batchId: Long = -1L): Unit = {
-    val spark = delta.sparkSession
-    val cur = storeSnapshot(spark, path)
-    if (batchId >= 0 && batchId <= cur.batchWatermark) return // replay — already folded
-    val cents = readCentroids(spark, path, cur)
-    val baseAssigned = liveAssigned(spark, path, cur)
-    val deltaAssigned =
-      assignFrame(delta.filter(col("embedding").isNotNull), cents)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val v = cur.version + 1
-      deltaAssigned
-        .select("vec_id", "embedding", "nrm", "list_id")
-        .write.partitionBy("list_id")
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/${StoreManifest.componentDir("assigned", v)}")
-      crossingPairs(baseAssigned, deltaAssigned, threshold)
-        .select(least(col("new_id"), col("base_id")).as("a"),
-          greatest(col("new_id"), col("base_id")).as("b"))
-        .unionByName(cellPairs(deltaAssigned, threshold, cents.size))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/${StoreManifest.componentDir("edges", v)}")
-      StoreManifest.publish(spark, path, cur
-        .appending("assigned", StoreManifest.componentDir("assigned", v))
-        .appending("edges", StoreManifest.componentDir("edges", v))
-        .copy(version = v, batchWatermark = math.max(cur.batchWatermark, batchId)))
-    } finally deltaAssigned.unpersist(false)
+    val store = SemanticStore.at(delta.sparkSession, path)
+    store.append(batchId) { (cur, w) =>
+      val cents = readCentroids(store, cur)
+      val deltaAssigned =
+        assignFrame(delta.filter(col("embedding").isNotNull), cents)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        w("assigned", deltaAssigned)
+        w("edges", crossingPairs(store.live(cur, "assigned"), deltaAssigned, threshold)
+          .select(least(col("new_id"), col("base_id")).as("a"),
+            greatest(col("new_id"), col("base_id")).as("b"))
+          .unionByName(cellPairs(deltaAssigned, threshold, cents.size)))
+      } finally deltaAssigned.unpersist(false)
+    }
   }
-
-  /** The cell-partitioned assignment store, read with an EXPLICIT
-    * schema: `list_id` is a directory-name partition column, and
-    * inference would type it INT — silently casting the probe's join
-    * key (killing dynamic partition pruning) and mistyping the merged
-    * output. The declared schema keeps it the LONG the writer produced.
-    */
-  private val AssignedSchema = "vec_id LONG, embedding ARRAY<FLOAT>, nrm DOUBLE, list_id LONG"
-
-  private def readAssigned(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      snap: StoreManifest.Snapshot): DataFrame =
-    StoreManifest.readComponent(spark, path, snap, "assigned", Some(AssignedSchema)).get
 
   /** The stored quantizer, sorted by cid — bounded collect (≤ nlist
     * rows, the [[AnnIvf.initCentroids]] bound).
     */
   private def readCentroids(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      snap: StoreManifest.Snapshot): Seq[(Long, Array[Float])] =
-    StoreManifest.readComponent(spark, path, snap, "centroids").get
+      store: StoreManifest.Store, snap: StoreManifest.Snapshot): Seq[(Long, Array[Float])] =
+    store.read(snap, "centroids")
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
       .toIndexedSeq
@@ -358,42 +326,8 @@ object SemDedup {
     * the moment the tombstone publishes. Centroids are static (the
     * [[graft.ops.AnnPq.deleteFromPqIndex]] quantizer contract).
     */
-  def deleteFromSemanticStore(deletedIds: DataFrame, path: String): Unit = {
-    val spark = deletedIds.sparkSession
-    val cur = storeSnapshot(spark, path)
-    val v = cur.version + 1
-    deletedIds.select(col("vec_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/${StoreManifest.componentDir("tombstones", v)}")
-    StoreManifest.publish(spark, path, cur
-      .appending("tombstones", StoreManifest.componentDir("tombstones", v))
-      .copy(version = v))
-  }
-
-  private def storeTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      snap: StoreManifest.Snapshot): Option[DataFrame] =
-    StoreManifest.readComponent(spark, path, snap, "tombstones")
-
-  private def liveAssigned(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      snap: StoreManifest.Snapshot): DataFrame =
-    storeTombstones(spark, path, snap).fold(readAssigned(spark, path, snap))(t =>
-      readAssigned(spark, path, snap)
-        .join(broadcast(t.select("vec_id")), Seq("vec_id"), "left_anti"))
-
-  private def liveEdges(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      snap: StoreManifest.Snapshot): DataFrame = {
-    val edges = StoreManifest.readComponent(spark, path, snap, "edges").get
-    storeTombstones(spark, path, snap).fold(edges) { t =>
-      val tb = broadcast(t.select("vec_id"))
-      edges
-        .join(tb.withColumnRenamed("vec_id", "a"), Seq("a"), "left_anti")
-        .join(tb.withColumnRenamed("vec_id", "b"), Seq("b"), "left_anti")
-    }
-  }
+  def deleteFromSemanticStore(deletedIds: DataFrame, path: String): Unit =
+    SemanticStore.at(deletedIds.sparkSession, path).tombstone(deletedIds)
 
   /** Fold the tombstones into the store files: assigned rows and edges
     * touching a deleted vector are rewritten away (cell partitioning
@@ -408,23 +342,11 @@ object SemDedup {
     */
   def compactSemanticStore(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val cur = storeSnapshot(spark, path)
-    storeTombstones(spark, path, cur).foreach { _ =>
-      val v = cur.version + 1
-      liveAssigned(spark, path, cur)
-        .select("vec_id", "embedding", "nrm", "list_id")
-        .write.partitionBy("list_id")
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/${StoreManifest.componentDir("assigned", v)}")
-      liveEdges(spark, path, cur)
-        .select("a", "b")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/${StoreManifest.componentDir("edges", v)}")
-      StoreManifest.publish(spark, path, StoreManifest.Snapshot(
-        v, cur.batchWatermark, Map(
-          "centroids" -> cur.components("centroids"),
-          "assigned" -> Seq(StoreManifest.componentDir("assigned", v)),
-          "edges" -> Seq(StoreManifest.componentDir("edges", v)))))
+    val store = SemanticStore.at(spark, path)
+    val cur = store.snapshot()
+    if (store.tombstoned(cur)) store.compact(cur) { w =>
+      w("assigned", store.live(cur, "assigned"))
+      w("edges", store.live(cur, "edges", "a", "b"))
     }
   }
 
@@ -443,10 +365,10 @@ object SemDedup {
       delta: DataFrame,
       threshold: Double = 0.3,
       asOfVersion: Option[Long] = None): DataFrame = {
-    val spark = delta.sparkSession
-    val snap = storeSnapshot(spark, storePath, asOfVersion)
-    val cents = readCentroids(spark, storePath, snap)
-    val baseAssigned = liveAssigned(spark, storePath, snap)
+    val store = SemanticStore.at(delta.sparkSession, storePath)
+    val snap = store.snapshot(asOfVersion)
+    val cents = readCentroids(store, snap)
+    val baseAssigned = store.live(snap, "assigned")
     val deltaAssigned =
       assignFrame(delta.filter(col("embedding").isNotNull), cents)
     crossingPairs(baseAssigned, deltaAssigned, threshold)
@@ -473,11 +395,11 @@ object SemDedup {
       storePath: String,
       delta: DataFrame,
       threshold: Double = 0.3): DataFrame = {
-    val spark = delta.sparkSession
-    val snap = storeSnapshot(spark, storePath)
-    val cents = readCentroids(spark, storePath, snap)
-    val baseAssigned = liveAssigned(spark, storePath, snap)
-    val baseEdges = liveEdges(spark, storePath, snap)
+    val store = SemanticStore.at(delta.sparkSession, storePath)
+    val snap = store.snapshot()
+    val cents = readCentroids(store, snap)
+    val baseAssigned = store.live(snap, "assigned")
+    val baseEdges = store.live(snap, "edges", "a", "b")
     val deltaAssigned =
       assignFrame(delta.filter(col("embedding").isNotNull), cents)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

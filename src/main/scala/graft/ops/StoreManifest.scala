@@ -4,11 +4,22 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.types.StructType
 
-/** Versioned-manifest publish protocol shared by the four persisted
+/** Versioned-manifest publish protocol shared by the five persisted
   * stores (BM25 postings [[Retrieval]], MinHash signatures [[NearDup]],
-  * IVF-PQ codes [[AnnPq]], semantic cells [[SemDedup]]).
+  * IVF-PQ codes [[AnnPq]], semantic cells [[SemDedup]], the BPE merge
+  * table [[TokenizerStore]]).
+  *
+  * Each store declares one [[Kind]] — its label, and the reader schema
+  * (and partition column) of every component — and runs the whole
+  * protocol through it ([[Store]]): `snapshot` (current or as-of),
+  * `create`, `append` (streaming watermark), `tombstone`, `replace`,
+  * `compact`, and the `read`/`live` component reads. A store keeps only
+  * its domain code: what it writes into each component, and how
+  * compaction rewrites one.
   *
   * The problem it solves: the r14 store compactors swapped directories
   * with `fs.delete(live); fs.rename(next, live)` — a crash between the
@@ -70,8 +81,138 @@ object StoreManifest {
           name, components.getOrElse(name, Nil) :+ dirName))
   }
 
-  /** The empty pre-history snapshot mutations build on. */
-  val Genesis: Snapshot = Snapshot(0L, -1L, Map.empty)
+  /** Writes one component's frame into a mutation's data dir. */
+  type Writer = (String, DataFrame) => Unit
+
+  /** One kind of persisted store: `label` names it in errors, `schemas`
+    * declares the reader schema of every component (a declared read
+    * spares parquet one schema-inference job per read, and keeps
+    * directory partition columns at their written types), and
+    * `partitionBy` names the components written partitioned. The
+    * one-column `tombstones` schema names the id the store's rows are
+    * keyed by.
+    */
+  final case class Kind(
+      label: String,
+      schemas: Map[String, String],
+      partitionBy: Map[String, String] = Map.empty) {
+    def at(spark: SparkSession, dir: String): Store = new Store(this, spark, dir)
+  }
+
+  /** The protocol of one store of `kind` at `dir`. Every mutation
+    * writes its data dirs through the writer it is handed — each
+    * written frame conformed to the component's declared schema, into
+    * a fresh dir named for the new version — then makes ONE publish
+    * naming exactly the dirs written; a mutation that writes nothing
+    * publishes nothing.
+    */
+  final class Store private[StoreManifest] (kind: Kind, spark: SparkSession, dir: String) {
+
+    private val Tombstones = "tombstones"
+
+    private def schema(name: String): StructType = StructType.fromDDL(kind.schemas(name))
+
+    /** The current snapshot; None for a store that never published. */
+    def current: Option[Snapshot] = currentSnapshot(spark, dir)
+
+    /** The snapshot `asOf` names (the time-travel read), else the
+      * current one; fails on a store that never published.
+      */
+    def snapshot(asOf: Option[Long] = None): Snapshot =
+      asOf.map(snapshotAt(spark, dir, _)).orElse(current)
+        .getOrElse(sys.error(s"${kind.label} $dir does not exist"))
+
+    /** Component `name` of `snap`, read with its declared schema. */
+    def read(snap: Snapshot, name: String): DataFrame =
+      readComponent(spark, dir, snap, name, Some(kind.schemas(name)))
+        .getOrElse(sys.error(s"${kind.label} $dir has no $name component"))
+
+    /** Component `name` of `snap` minus its tombstoned rows: a broadcast
+      * anti-join on each of `idCols` (default: the tombstones' id).
+      */
+    def live(snap: Snapshot, name: String, idCols: String*): DataFrame =
+      if (!tombstoned(snap)) read(snap, name)
+      else {
+        val cols = if (idCols.isEmpty) schema(Tombstones).fieldNames.toSeq else idCols
+        cols.foldLeft(read(snap, name)) { (df, c) =>
+          df.join(broadcast(read(snap, Tombstones).toDF(c)), Seq(c), "left_anti")
+        }
+      }
+
+    /** Whether `snap` holds tombstones (that a [[compact]] would fold). */
+    def tombstoned(snap: Snapshot): Boolean = snap.components.contains(Tombstones)
+
+    /** Publish `next(written)` after `write` ran against a writer whose
+      * dirs are named by `dirOf`; nothing when nothing was written.
+      */
+    private def mutate(dirOf: String => String)(write: Writer => Unit)(
+        next: Seq[(String, String)] => Snapshot): Unit = {
+      val written = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      write { (name, df) =>
+        val d = dirOf(name)
+        val w = df.select(schema(name).fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+          .write.mode(SaveMode.Overwrite)
+        kind.partitionBy.get(name).fold(w)(w.partitionBy(_)).parquet(s"$dir/$d")
+        written += name -> d
+      }
+      if (written.nonEmpty) publish(spark, dir, next(written.toSeq))
+    }
+
+    private def fresh(written: Seq[(String, String)]): Map[String, Seq[String]] =
+      written.map { case (name, d) => name -> Seq(d) }.toMap
+
+    /** First write: snapshot 1 holds exactly the components written. */
+    def create(write: Writer => Unit): Unit = {
+      require(current.isEmpty, s"${kind.label} $dir already exists — append or compact instead")
+      mutate(componentDir(_, 1L))(write)(ws => Snapshot(1L, -1L, fresh(ws)))
+    }
+
+    /** Append the components `write` writes, given the current snapshot,
+      * as the next version's dirs. `batchId` is the streaming
+      * exactly-once hook: a replayed foreachBatch id ≤ the watermark is
+      * skipped before any write; batch calls leave it at -1.
+      */
+    def append(batchId: Long = -1L)(write: (Snapshot, Writer) => Unit): Unit = {
+      val cur = snapshot()
+      if (batchId < 0 || batchId > cur.batchWatermark) {
+        val v = cur.version + 1
+        mutate(componentDir(_, v))(write(cur, _)) { ws =>
+          ws.foldLeft(cur) { case (s, (name, d)) => s.appending(name, d) }
+            .copy(version = v, batchWatermark = math.max(cur.batchWatermark, batchId))
+        }
+      }
+    }
+
+    /** Tombstone `ids` (a frame holding the store's id column): no data
+      * file touched, every [[live]] read drops them from this publish on.
+      */
+    def tombstone(ids: DataFrame): Unit = append()((_, w) => w(Tombstones, ids))
+
+    /** A whole-artifact version: the components `write` writes REPLACE
+      * the snapshot's. Each data dir carries an attempt-unique tag, so
+      * racers computing the same version write disjoint dirs and the
+      * loser (rejected at publish) can never touch the winner's; its
+      * orphan is swept by [[vacuum]]. Returns the published version.
+      */
+    def replace(write: Writer => Unit): Long = {
+      val v = current.fold(1L)(_.version + 1)
+      val tag = java.util.UUID.randomUUID().toString.take(8)
+      mutate(n => s"${componentDir(n, v)}-$tag")(write)(ws => Snapshot(v, -1L, fresh(ws)))
+      v
+    }
+
+    /** Fold `snap`'s tombstones into the files: the components `rewrite`
+      * writes get fresh dirs, the others are carried by reference, the
+      * tombstones are dropped — one publish. Never in place: `snap`'s
+      * dirs keep serving through a crash and to as-of readers.
+      */
+    def compact(snap: Snapshot)(rewrite: Writer => Unit): Unit = {
+      val v = snap.version + 1
+      mutate(componentDir(_, v))(rewrite) { ws =>
+        Snapshot(v, snap.batchWatermark, snap.components - Tombstones ++ fresh(ws))
+      }
+    }
+  }
 
   private val ManifestName = """v(\d{9})\.json""".r
 

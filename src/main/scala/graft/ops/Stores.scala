@@ -53,13 +53,11 @@ object Stores {
     } finally docIds.unpersist(false)
     import spark.implicits._
     Seq(
-      "postings" -> postingsDir,
-      "signatures" -> signatureDir,
-      "pq_index" -> pqIndexDir,
-      "semantic" -> semanticDir)
-      .map { case (store, dir) =>
-        (store, StoreManifest.currentSnapshot(spark, dir).get.version)
-      }
+      "postings" -> Retrieval.PostingsStore.at(spark, postingsDir),
+      "signatures" -> NearDup.SignatureStore.at(spark, signatureDir),
+      "pq_index" -> AnnPq.PqStore.at(spark, pqIndexDir),
+      "semantic" -> SemDedup.SemanticStore.at(spark, semanticDir))
+      .map { case (name, store) => (name, store.snapshot().version) }
       .toDF("store", "version")
   }
 }

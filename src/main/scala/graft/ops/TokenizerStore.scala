@@ -21,18 +21,17 @@ import org.apache.spark.sql.functions._
   */
 object TokenizerStore {
 
-  private val Component = "merges"
+  /** The tokenizer store: one merge table per version, in rank order. */
+  private val MergesStore = StoreManifest.Kind("tokenizer store", Map(
+    "merges" -> "step INT, left STRING, right STRING, cnt LONG"))
 
   /** Train on `docs` ([[TextOps.bpeMerges]]) and publish the learned
-    * table as the store's next version. Returns the published version.
-    * A concurrent writer racing to the same version is rejected by the
-    * manifest's exists-check — last-writer-loses, never a clobber. The
-    * data dir is ATTEMPT-UNIQUE (name carries a random tag), so two
-    * racers computing the same `next` write disjoint dirs and the
-    * loser can never clobber or interleave with the dir the winner's
-    * published manifest references (the immutability invariant
-    * [[StoreManifest]] relies on); the loser's orphan dir is
-    * unreferenced by every manifest and swept by the next `vacuum`.
+    * table as the store's next version ([[StoreManifest.Store.replace]]).
+    * Returns the published version. A concurrent writer racing to the
+    * same version is rejected by the manifest's exists-check —
+    * last-writer-loses, never a clobber — and the replace's
+    * attempt-unique data dir keeps the loser from ever touching the dir
+    * the winner's manifest references.
     */
   def trainAndPublish(
       spark: SparkSession,
@@ -41,39 +40,33 @@ object TokenizerStore {
       nMerges: Int,
       minCount: Long = 2L): Long = {
     val learned = TextOps.bpeMerges(docs, nMerges, minCount)
-    val next = StoreManifest.currentSnapshot(spark, dir)
-      .map(_.version + 1L).getOrElse(1L)
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir = s"${StoreManifest.componentDir(Component, next)}-$attempt"
     import spark.implicits._
-    learned.toDF("step", "left", "right", "cnt")
-      .coalesce(1) // one row per merge: a single small file per version
-      .write.parquet(s"$dir/$dataDir") // errorifexists: the dir is ours alone
-    StoreManifest.publish(spark, dir,
-      StoreManifest.Snapshot(next, -1L, Map(Component -> Seq(dataDir))))
-    next
+    MergesStore.at(spark, dir).replace { w =>
+      // one row per merge: a single small file per version
+      w("merges", learned.toDF("step", "left", "right", "cnt").coalesce(1))
+    }
   }
 
   /** The merge table of snapshot `version`, in rank order — feed it to
     * [[TextOps.bpeTokenCounts]] / [[TrainPipe.budgetSample]](merges=…).
     */
-  def mergesAt(spark: SparkSession, dir: String, version: Long): Seq[(String, String)] =
-    readMerges(spark, dir, StoreManifest.snapshotAt(spark, dir, version))
+  def mergesAt(spark: SparkSession, dir: String, version: Long): Seq[(String, String)] = {
+    val store = MergesStore.at(spark, dir)
+    readMerges(store, store.snapshot(Some(version)))
+  }
 
   /** The currently-serving merge table, in rank order; empty if the
     * store has never published.
     */
-  def currentMerges(spark: SparkSession, dir: String): Seq[(String, String)] =
-    StoreManifest.currentSnapshot(spark, dir)
-      .map(readMerges(spark, dir, _)).getOrElse(Seq.empty)
+  def currentMerges(spark: SparkSession, dir: String): Seq[(String, String)] = {
+    val store = MergesStore.at(spark, dir)
+    store.current.map(readMerges(store, _)).getOrElse(Seq.empty)
+  }
 
   private def readMerges(
-      spark: SparkSession, dir: String,
-      snap: StoreManifest.Snapshot): Seq[(String, String)] =
-    StoreManifest.readComponent(spark, dir, snap, Component,
-      Some("step INT, left STRING, right STRING, cnt LONG"))
-      .map(_.orderBy(asc("step")) // rank order IS the apply order
-        .collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq)
-      .getOrElse(Seq.empty)
+      store: StoreManifest.Store, snap: StoreManifest.Snapshot): Seq[(String, String)] =
+    store.read(snap, "merges")
+      .orderBy(asc("step")) // rank order IS the apply order
+      .collect()
+      .map(r => (r.getString(1), r.getString(2))).toSeq
 }

@@ -1381,9 +1381,10 @@ object StreamingEtl {
     * ([[graft.ops.Retrieval.appendPostingsStore]],
     * [[graft.ops.NearDup.appendSignatureStore]],
     * [[graft.ops.AnnPq.appendPqIndex]],
-    * [[graft.ops.SemDedup.appendSemanticStore]]) compare that id
-    * against the manifest's `batchWatermark` and skip ids already
-    * folded.
+    * [[graft.ops.SemDedup.appendSemanticStore]]) pass it to their
+    * store's one append ([[graft.ops.StoreManifest.Store.append]]),
+    * which compares it against the manifest's `batchWatermark` and
+    * skips ids already folded.
     *
     * Exactly-once: foreachBatch is at-least-once — a crash after the
     * store publish but before the checkpoint commit replays the same
@@ -1392,7 +1393,13 @@ object StreamingEtl {
     * ([[graft.ops.StoreManifest.Snapshot]]), swapped by the same
     * single-file rename as the data-dir lists (the
     * [[runWithBatchReport]] admission-ledger discipline, moved into
-    * the store itself). Replayed ids are rejected BEFORE any write.
+    * the store itself). Replayed ids are rejected BEFORE any write. A
+    * crash after a batch's data write but before its publish leaves
+    * orphan dirs the replay overwrites.
+    *
+    * Spark logs at every start that AQE "will be disabled" for the
+    * streaming query: that holds only for the stream's own incremental
+    * plan, and the jobs `append` runs still plan adaptively.
     *
     * Drains what is available, then stops (AvailableNow — the nightly
     * backfill shape); schedule it per crawl drop or wrap with a
@@ -1557,9 +1564,7 @@ object StreamingEtl {
       threshold: Double = 0.5): Unit =
     runIndexAppend(stream, checkpoint, (batch, batchId) => {
       val spark = batch.sparkSession
-      val cur = graft.ops.StoreManifest.currentSnapshot(spark, storePath)
-        .getOrElse(sys.error(
-          s"signature store $storePath does not exist — write the base corpus first"))
+      val cur = graft.ops.NearDup.SignatureStore.at(spark, storePath).snapshot()
       if (batchId > cur.batchWatermark) {
         import graft.ops.{Lsh, NearDup}
         val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK

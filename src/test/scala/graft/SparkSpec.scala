@@ -28,6 +28,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     e
   }
 
+  /** The number of Spark jobs `body` runs, attributed by a fresh job tag
+    * (inherited by broadcast and stream threads) rather than by a timing
+    * window, so a job another thread runs meanwhile is not counted.
+    */
+  def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-of-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(tag)
+    try body finally sc.removeJobTag(tag)
+    // the status store is fed through the listener bus, whose drain is
+    // private[spark]
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    sc.statusTracker.getJobIdsForTag(tag).length
+  }
+
   def tmpDir(prefix: String): java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     p.toFile.deleteOnExit()
